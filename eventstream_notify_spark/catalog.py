@@ -62,11 +62,13 @@ def tune_session(spark: SparkSession) -> None:
     runtime-settable and set here).
 
     - nanosAsLong/UTC: correctness (see ``table``).
-    - shuffle partitions 32: a vanilla session defaults to 200 — at
-      local[32]/sf0.1 that's 6x task-scheduling overhead per shuffle,
-      and for STREAMING queries it means 200 RocksDB state-store
-      instances per trigger (state partition count is pinned to
-      shuffle partitions; AQE never coalesces streaming state).
+    - shuffle partitions = ``SPARK_GRAFT_CPUS`` (32 when unset or not
+      a number): a vanilla session defaults to 200 — at local[32]/sf0.1
+      that's 6x task-scheduling overhead per shuffle, and for STREAMING
+      queries it means 200 RocksDB state-store instances per trigger
+      (state partition count is pinned to shuffle partitions; AQE never
+      coalesces streaming state). ``start_pipeline`` further caps its
+      own state at the cluster's cores.
     - AQE + coalesce/skew: runtime re-planning for batch queries.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -10,6 +10,15 @@ scale: AQE on (runtime re-planning, skew-join splitting, partition
 coalescing), shuffle partitions sized via env, UTC session timezone
 (determinism vs naive-timestamp oracles), Arrow for any pandas
 exchange.
+
+The shuffle-partition default (32) is for batch queries. Streaming
+state is sized apart from it: ``streaming.pipeline.start_pipeline``
+gives its stateful operators ``min(spark.sql.shuffle.partitions,
+defaultParallelism)`` partitions, scoped to the query's start, so the
+session itself keeps 32. That cap is read once, at a checkpoint's
+first start, and the offset log pins it for the stream's life; under
+dynamic allocation it reflects the executors registered at that
+moment.
 """
 
 from __future__ import annotations

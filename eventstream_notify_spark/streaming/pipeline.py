@@ -128,7 +128,20 @@ def start_pipeline(
     """Production shape of the full pipeline: dedup → stateful rate
     limit → foreachBatch sink (keyed upsert + notifications), with
     exactly-once bookkeeping via the checkpoint WAL. Returns the
-    running StreamingQuery (bounded when available_now)."""
+    running StreamingQuery (bounded when available_now).
+
+    Stateful partitions: both stateful operators get
+    ``min(spark.sql.shuffle.partitions, defaultParallelism)``
+    partitions. Every partition opens and commits one state store and
+    runs one limiter task per trigger, so partitions beyond the cores
+    only add fixed per-trigger cost (the batch default of 32 on a
+    4-core host meant 64 store commits a trigger instead of 8). The
+    count is read once, at a checkpoint's first start, and Spark pins
+    it in the offset log from then on; a restart keeps the recorded
+    count whatever the session says. Under dynamic allocation the cap
+    reflects the executors registered at that first start. The setting
+    is scoped to ``start()`` (the query runs on a clone of the session
+    taken there): the caller's session keeps its own value."""
     admitted = rate_limit_stream(
         streaming_dedup(events, ttl),
         limit=rate_limit,
@@ -142,7 +155,15 @@ def start_pipeline(
     )
     if available_now:
         writer = writer.trigger(availableNow=True)
-    return writer.start()
+    spark = events.sparkSession
+    key = "spark.sql.shuffle.partitions"
+    caller = spark.conf.get(key)
+    cap = min(int(caller), spark.sparkContext.defaultParallelism)
+    spark.conf.set(key, str(cap))
+    try:
+        return writer.start()
+    finally:
+        spark.conf.set(key, caller)
 
 
 def notify_sink(store, alert_store):

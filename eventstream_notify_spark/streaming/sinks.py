@@ -30,13 +30,14 @@ class ParquetKeyedStore:
         self.ts_col = ts_col
 
     def upsert_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        """foreachBatch hook — idempotent per epoch."""
-        spark = batch_df.sparkSession
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        """foreachBatch hook — idempotent per epoch. Dynamic overwrite
+        is a per-write option, so the caller's session keeps its own
+        partitionOverwriteMode."""
         (
             batch_df.withColumn("_epoch", F.lit(int(epoch_id)))
             .write.partitionBy("_epoch")
             .mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .parquet(self.path)
         )
 
@@ -92,7 +93,7 @@ class MergeKeyedStore(ParquetKeyedStore):
     """The production MERGE shape as a drop-in sibling: each micro-batch
     is applied as ``MERGE INTO store USING batch ON store.key = batch.key
     WHEN MATCHED THEN UPDATE WHEN NOT MATCHED THEN INSERT`` — expressed
-    here as a full-outer coalesce rewrite because plain parquet has no
+    here as a full-outer join rewrite because plain parquet has no
     transactional row-level MERGE. Swapping in Delta/Iceberg is exactly
     one method: override ``upsert_batch`` with ``DeltaTable.merge`` /
     ``MERGE INTO`` SQL and delete the rewrite. Everything downstream
@@ -109,10 +110,11 @@ class MergeKeyedStore(ParquetKeyedStore):
     O(state). At 100 TB, ``n_buckets`` scales with state size exactly
     like table-format file counts do.
 
-    Idempotence: the merge is row-level idempotent — batch rows win
-    via coalesce, so replaying an epoch onto its own post-state
-    reproduces that post-state bit-for-bit (each batch key overwrites
-    itself with the same values; non-batch keys pass through). A
+    Idempotence: the merge is row-level idempotent — a batch row
+    replaces its key's whole row, so replaying an epoch onto its own
+    post-state reproduces that post-state bit-for-bit (each batch key
+    overwrites itself with the same values; non-batch keys pass
+    through). A
     replay after a PARTIAL bucket write (crash mid-overwrite) is
     therefore also safe: already-written and not-yet-written buckets
     both converge on the same result (exactly-once effect).
@@ -146,17 +148,20 @@ class MergeKeyedStore(ParquetKeyedStore):
         return src
 
     def _merge(self, target: DataFrame, src: DataFrame) -> DataFrame:
-        """MERGE one deduped batch onto the pre-state: batch rows win
-        via coalesce (UPDATE), unmatched batch rows INSERT, unmatched
-        target rows pass through."""
+        """MERGE one deduped batch onto the pre-state: a matched key
+        takes the whole batch row, NULLs included (UPDATE), unmatched
+        batch rows INSERT, unmatched target rows pass through."""
         cols = [c for c in target.columns]
         src = src.select(*cols)
         t, s = target.alias("t"), src.alias("s")
+        in_batch = F.col(f"s.{self.key}").isNotNull()
         return t.join(
             s, F.col(f"t.{self.key}") == F.col(f"s.{self.key}"), "full_outer"
         ).select(
             *[
-                F.coalesce(F.col(f"s.{c}"), F.col(f"t.{c}")).alias(c)
+                F.when(in_batch, F.col(f"s.{c}"))
+                .otherwise(F.col(f"t.{c}"))
+                .alias(c)
                 for c in cols
             ]
         )
@@ -196,12 +201,12 @@ class MergeKeyedStore(ParquetKeyedStore):
             if target is not None
             else self._first_epoch(src)
         )
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         # dynamic overwrite rewrites exactly the _bucket partitions
         # present in `merged` = the touched buckets
         (
             merged.write.partitionBy("_bucket")
             .mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .parquet(self.path)
         )
 
@@ -261,8 +266,8 @@ class CdcKeyedStore(MergeKeyedStore):
         return self._tombstoned(src)
 
     def _merge(self, target: DataFrame, src: DataFrame) -> DataFrame:
-        # batch rows (tombstones included) win over target via the
-        # inherited coalesce — a delete lands as _deleted=true, a
+        # batch rows (tombstones included) replace the target row via
+        # the inherited merge — a delete lands as _deleted=true, a
         # later upsert resurrects the key by overwriting the flag
         return super()._merge(target, self._tombstoned(src))
 

@@ -110,6 +110,54 @@ def test_merge_sink_paths_share_kv_semantics(spark, tmp_path):
     assert kv_log == kv_merge == {1: 1.0, 2: 20.0, 3: 3.0}
 
 
+def test_merge_null_update_replaces_whole_row(spark, tmp_path):
+    """A matched key takes the batch row as written: NULLs in the
+    update replace the old values instead of keeping them (no row
+    mixed from two writes), and both store kinds agree."""
+    from eventstream_notify_spark.streaming.sinks import ParquetKeyedStore
+
+    t0 = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+    schema = "event_id long, ts timestamp, value double, props string"
+    batches = [
+        [(1, t0, 1.0, '{"k":1}'), (2, t0, 2.0, '{"k":2}')],
+        [(1, t0 + dt.timedelta(seconds=5), None, None)],
+    ]
+    log_store = ParquetKeyedStore(str(tmp_path / "log"))
+    merge_store = MergeKeyedStore(str(tmp_path / "merge"))
+    for epoch, rows in enumerate(batches):
+        log_store.upsert_batch(spark.createDataFrame(rows, schema), epoch)
+        merge_store.upsert_batch(spark.createDataFrame(rows, schema), epoch)
+
+    def kv(df):
+        return {r.event_id: (r.value, r.props) for r in df.collect()}
+
+    want = {1: (None, None), 2: (2.0, '{"k":2}')}
+    assert kv(merge_store.current(spark)) == want
+    assert kv(log_store.compacted(spark)) == want
+
+
+def test_keyed_store_upsert_leaves_session_overwrite_mode(spark, tmp_path):
+    """Both stores overwrite dynamically per write, without switching
+    the caller's session to dynamic partition overwrite."""
+    from eventstream_notify_spark.streaming.sinks import ParquetKeyedStore
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "STATIC")
+    try:
+        for store in (
+            ParquetKeyedStore(str(tmp_path / "log")),
+            MergeKeyedStore(str(tmp_path / "merge")),
+        ):
+            store.upsert_batch(_mk_batch(spark, [(1, 0, 1.0)]), 0)
+            store.upsert_batch(_mk_batch(spark, [(2, 1, 2.0)]), 1)
+            assert spark.conf.get(key) == "STATIC"
+            # still dynamic: the second write kept the first one's rows
+            assert store.log(spark).count() == 2
+    finally:
+        spark.conf.set(key, prev)
+
+
 def test_merge_untouched_buckets_not_rewritten(spark, tmp_path):
     """Bucket pruning: an epoch rewrites ONLY the _bucket partitions
     its batch touches — every file in an untouched bucket is

@@ -6,7 +6,9 @@ checkpoint recovery, idempotent epoch overwrite (SURVEY §5.2 items
 
 from __future__ import annotations
 
+import contextlib
 import datetime as dt
+import json
 import os
 
 import pandas as pd
@@ -92,18 +94,81 @@ def test_stateful_rate_limit_anchored_window(spark, tmp_path):
     assert kept == [0, 1, 2, 3, 4, 99]
 
 
-def test_pipeline_checkpoint_recovery_no_reprocessing(spark, tmp_path):
+SHUFFLE = "spark.sql.shuffle.partitions"
+
+
+@contextlib.contextmanager
+def shuffle_partitions(spark, n):
+    prev = spark.conf.get(SHUFFLE)
+    spark.conf.set(SHUFFLE, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(SHUFFLE, prev)
+
+
+def state_instances(q):
+    """numStateStoreInstances of every stateful operator, over every
+    progress the query reported."""
+    return {
+        op["numStateStoreInstances"]
+        for p in q.recentProgress
+        for op in json.loads(p.json)["stateOperators"]
+    }
+
+
+@pytest.mark.parametrize("above_cores", [True, False])
+def test_pipeline_state_partitions_capped_at_cores(spark, tmp_path, above_cores):
+    """start_pipeline sizes its state to min(shuffle partitions,
+    defaultParallelism) -- a setting above the cores is capped, a lower
+    one (1) is honoured -- and the caller's session keeps its own
+    value."""
+    cores = spark.sparkContext.defaultParallelism
+    conf = cores + 3 if above_cores else 1
+    src_path = str(tmp_path / "src")
+    write_batch(spark, src_path, [ev(1, 0, 1), ev(2, 1, 2), ev(3, 2, 3)], 0)
+    store = ParquetKeyedStore(str(tmp_path / "store"))
+    with shuffle_partitions(spark, conf):
+        q = start_pipeline(
+            stream_from(spark, src_path),
+            str(tmp_path / "ckpt"),
+            store.upsert_batch,
+            available_now=True,
+        )
+        q.awaitTermination()
+        assert spark.conf.get(SHUFFLE) == str(conf)
+    assert state_instances(q) == {min(conf, cores)}
+    ids = sorted(r.event_id for r in store.compacted(spark).collect())
+    assert ids == [1, 2, 3]
+
+
+def test_pipeline_checkpoint_recovery_no_reprocessing(
+    spark, tmp_path, monkeypatch
+):
     """Kill-and-restart: a second run over the same checkpoint must not
     re-emit already-committed events (the reference's seek-to-stored+1,
-    auto_kafka_redis.py:261-270 — ours via the checkpoint WAL)."""
+    auto_kafka_redis.py:261-270 — ours via the checkpoint WAL). The
+    checkpoint is first started as if on a host with more cores than
+    this one: the restart keeps the state partition count recorded in
+    the offset log, not this host's cap."""
     src_path = str(tmp_path / "src")
     store = ParquetKeyedStore(str(tmp_path / "store"))
     ckpt = str(tmp_path / "ckpt")
+    cores = spark.sparkContext.defaultParallelism
+    first = cores + 3
     write_batch(spark, src_path, [ev(1, 0, 1), ev(2, 1, 2)], 0)
-    q = start_pipeline(
-        stream_from(spark, src_path), ckpt, store.upsert_batch, available_now=True
-    )
-    q.awaitTermination()
+    with monkeypatch.context() as m, shuffle_partitions(spark, first):
+        m.setattr(
+            type(spark.sparkContext),
+            "defaultParallelism",
+            property(lambda _: first),
+        )
+        q = start_pipeline(
+            stream_from(spark, src_path), ckpt, store.upsert_batch,
+            available_now=True,
+        )
+        q.awaitTermination()
+    assert state_instances(q) == {first}
     first_epochs = {r._epoch for r in store.log(spark).select("_epoch").collect()}
 
     # new data arrives; restart from the same checkpoint
@@ -112,6 +177,7 @@ def test_pipeline_checkpoint_recovery_no_reprocessing(spark, tmp_path):
         stream_from(spark, src_path), ckpt, store.upsert_batch, available_now=True
     )
     q2.awaitTermination()
+    assert state_instances(q2) == {first}
 
     compacted = store.compacted(spark)
     assert sorted(r.event_id for r in compacted.collect()) == [1, 2, 3]
