@@ -71,22 +71,27 @@ WS_MAX_FRAME = 1 << 20  # cap client frames at 1 MiB — the 64-bit
 
 
 def ws_read_frame(rfile) -> tuple[int | None, bytes]:
-    """Read one masked client frame; (None, b'') on EOF, oversized
-    payload, or an unmasked frame (RFC 6455 §5.1 requires the server
-    to fail the connection on unmasked client frames)."""
+    """Read one masked client frame; (None, b'') on EOF (also inside
+    the header), oversized payload, or an unmasked frame (RFC 6455
+    §5.1 requires the server to fail the connection on unmasked client
+    frames)."""
     hdr = rfile.read(2)
     if len(hdr) < 2:
         return None, b""
     b0, b1 = hdr
     opcode = b0 & 0x0F
     n = b1 & 0x7F
-    if n == 126:
-        n = struct.unpack("!H", rfile.read(2))[0]
-    elif n == 127:
-        n = struct.unpack("!Q", rfile.read(8))[0]
+    if n in (126, 127):
+        width = 2 if n == 126 else 8
+        ext = rfile.read(width)
+        if len(ext) < width:
+            return None, b""
+        n = int.from_bytes(ext, "big")
     if n > WS_MAX_FRAME or not (b1 & 0x80):
         return None, b""
     mask = rfile.read(4)
+    if len(mask) < 4:
+        return None, b""
     data = rfile.read(n)
     if len(data) < n:
         return None, b""

@@ -5,7 +5,7 @@ reference consumer loop (auto_kafka_redis.py:320-408)   →  here
 ---------------------------------------------------------------------
 manual offset restore + commit (:231-270, :398-405)     →  checkpointLocation WAL
 per-event SETNX dedup w/ 60 s TTL (:332-346)            →  withWatermark + dropDuplicatesWithinWatermark
-per-user INCR/EXPIRE rate limit (:348-366)              →  applyInPandasWithState (streaming/state.py)
+per-user INCR/EXPIRE rate limit (:348-366)              →  applyInPandasWithState sharded by user_id (streaming/state.py)
 32-event Redis pipeline flush (:368-396)                →  micro-batch foreachBatch sink
 SET event:{id} + PUBLISH events (:372-374)              →  keyed upsert store + alert/notify sink
 
@@ -141,7 +141,13 @@ def start_pipeline(
     count whatever the session says. Under dynamic allocation the cap
     reflects the executors registered at that first start. The setting
     is scoped to ``start()`` (the query runs on a clone of the session
-    taken there): the caller's session keeps its own value."""
+    taken there): the caller's session keeps its own value.
+
+    A checkpoint whose rate-limiter state predates the user-sharded
+    limiter (state keyed by ``user_id``) cannot be restarted: its
+    grouping key and state schema differ, and Spark refuses it with a
+    state-schema error. Start such a pipeline on a new checkpoint
+    directory; there is no migration."""
     admitted = rate_limit_stream(
         streaming_dedup(events, ttl),
         limit=rate_limit,

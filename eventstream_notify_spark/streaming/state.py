@@ -4,10 +4,14 @@ limiter (reference: INCR + EXPIRE-on-first, auto_kafka_redis.py:
 348-366 — the window starts at the first event and expires TTL later,
 unlike tumbling epoch windows).
 
-Implemented with ``applyInPandasWithState``: state per user =
-(window_start_us, admitted_count); event-time timeout evicts idle
-state one window after the watermark passes it (bounded state at
-100 TB — SURVEY §2 scale notes).
+Implemented with ``applyInPandasWithState`` keyed by a user SHARD,
+``pmod(xxhash64(user_id), RATE_SHARDS)``, not by user: one Python call
+per touched shard per trigger instead of one per active user. A
+shard's state is parallel arrays (user_id, window_start_us,
+admitted_count) holding only the users whose window is still open;
+each call drops the users whose window ended at or below the
+watermark and arms the event-time timeout at the earliest remaining
+window end, so state stays bounded (SURVEY §2 scale notes).
 """
 
 from __future__ import annotations
@@ -16,6 +20,7 @@ import warnings
 from collections.abc import Iterator
 from typing import Any
 
+import numpy as np
 import pandas as pd
 
 # Python workers import this module while unpickling the stateful
@@ -34,12 +39,140 @@ RATE_OUTPUT_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string, "
     "value double, props string"
 )
-RATE_STATE_SCHEMA = "win_start_us long, admitted int"
+_RATE_COLS = [f.split()[0] for f in RATE_OUTPUT_SCHEMA.split(",")]
+RATE_SHARDS = 64  # limiter state keys: numRowsTotal <= 64 whatever the users
+RATE_STATE_SCHEMA = (
+    "user_id array<long>, win_start_us array<long>, admitted array<int>"
+)
+
+# A shard's open windows as parallel arrays (user_id, is_null,
+# win_start_us, admitted), sorted by (is_null, user_id): the NULL user
+# (at most one) sorts last, with id 0 in the array.
+_Users = tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]
+
+
+def _shard_users(state: GroupState) -> _Users:
+    """The open windows of a shard's state; a stored None id is the
+    NULL user's window, always the last entry."""
+    if not state.exists:
+        uids, starts, adm = [], [], []
+    else:
+        uids, starts, adm = (list(a) for a in state.get)
+    is_null = np.zeros(len(uids), dtype=bool)
+    if uids and uids[-1] is None:
+        uids[-1] = 0
+        is_null[-1] = True
+    return (
+        np.array(uids, dtype=np.int64),
+        is_null,
+        np.array(starts, dtype=np.int64),
+        np.array(adm, dtype=np.int64),
+    )
+
+
+def _state_value(users: _Users) -> tuple[list, list, list]:
+    uid, is_null, start, adm = users
+    ids = uid.tolist()
+    if len(ids) and is_null[-1]:
+        ids[-1] = None
+    return ids, start.tolist(), adm.tolist()
+
+
+def _admit(
+    uid: np.ndarray,
+    is_null: np.ndarray,
+    ts_us: np.ndarray,
+    event_id: np.ndarray,
+    users: _Users,
+    limit: int,
+    window_us: int,
+) -> tuple[np.ndarray, _Users]:
+    """One numpy pass of the limiter over a shard's rows: the keep mask
+    (in input order) and the shard's windows after the rows.
+
+    Each user's rows, in (ts, event_id) order, first fill the window
+    the user left open, then open windows anchored at their first
+    event, each admitting its first ``limit`` rows. Every round of the
+    anchor loop advances all users by one window at once, so the loop
+    runs (most windows one user opens in the batch) times."""
+    n = len(ts_us)
+    order = np.lexsort((event_id, ts_us, uid, is_null))
+    uid, is_null, ts_us = uid[order], is_null[order], ts_us[order]
+    new_user = np.ones(n, dtype=bool)
+    new_user[1:] = (uid[1:] != uid[:-1]) | (is_null[1:] != is_null[:-1])
+    gs = np.flatnonzero(new_user)  # each user's first row
+    ge = np.append(gs[1:], n)  # one past its last row
+    grp = np.cumsum(new_user) - 1  # each row's user
+    g_uid, g_null = uid[gs], is_null[gs]
+
+    # join each user to the window it left open, if any
+    s_uid, s_null, s_start, s_adm = users
+    m = len(s_uid) - int(s_null[-1:].sum())  # non-NULL users stored
+    idx = np.searchsorted(s_uid[:m], g_uid)
+    idx[g_null] = m
+    found = idx < len(s_uid)
+    hit = idx[found]
+    found[found] = (s_uid[hit] == g_uid[found]) & (s_null[hit] == g_null[found])
+    hit = idx[found]  # the stored slot of each user that has one
+    w_start = np.zeros(len(gs), dtype=np.int64)
+    w_adm = np.zeros(len(gs), dtype=np.int64)
+    w_start[found] = s_start[hit]
+    w_adm[found] = s_adm[hit]
+
+    # rows inside the open window: a prefix of each user's rows
+    rank = np.arange(n) - gs[grp]
+    cont = found[grp] & (ts_us < (w_start + window_us)[grp])
+    n_cont = np.bincount(grp, weights=cont, minlength=len(gs)).astype(np.int64)
+    room = np.clip(limit - w_adm, 0, None)
+    keep = cont & (rank < room[grp])
+
+    # nxt[r]: the first row of r's user at or past ts[r] + window, by
+    # one searchsorted over (user, dense rank of ts) -- monotone keys
+    ranks = np.unique(np.concatenate([ts_us, ts_us + window_us]))
+    span = len(ranks)
+    pos = grp * span + np.searchsorted(ranks, ts_us)
+    nxt = np.searchsorted(
+        pos, grp * span + np.searchsorted(ranks, ts_us + window_us)
+    )
+    first = gs + n_cont  # each user's first row past its open window
+    anchor = np.zeros(n, dtype=bool)
+    opened = first < ge
+    cur, end = first[opened], ge[opened]
+    while len(cur):
+        anchor[cur] = True
+        cur = nxt[cur]
+        more = cur < end
+        cur, end = cur[more], end[more]
+    last = np.maximum.accumulate(np.where(anchor, np.arange(n), -1))
+    keep |= ~cont & (np.arange(n) - last < limit)
+
+    la = last[ge - 1]  # each user's last anchor, where it opened one
+    g_start = np.where(opened, ts_us[la], w_start)
+    g_adm = np.where(
+        opened, np.minimum(limit, ge - la), w_adm + np.minimum(room, n_cont)
+    )
+    untouched = np.ones(len(s_uid), dtype=bool)
+    untouched[hit] = False
+    merged = (
+        np.concatenate([s_uid[untouched], g_uid]),
+        np.concatenate([s_null[untouched], g_null]),
+        np.concatenate([s_start[untouched], g_start]),
+        np.concatenate([s_adm[untouched], g_adm]),
+    )
+    o = np.lexsort((merged[0], merged[1]))
+    keep_in = np.empty(n, dtype=bool)
+    keep_in[order] = keep
+    return keep_in, tuple(a[o] for a in merged)
 
 
 def make_rate_limiter(limit: int, window_s: int):
-    """Build the per-key kernel. Kept importable/picklable at module
-    scope via closure over plain ints."""
+    """Build the per-shard kernel. Kept importable/picklable at module
+    scope via closure over plain ints.
+
+    Input rows carry ``user_id`` with NULL replaced by 0 and a
+    ``user_null`` flag (so the ids stay exact int64 -- a NULL would
+    turn the column into float64), plus the ``shard`` key; the output
+    restores the NULLs and drops both helper columns."""
     window_us = window_s * 1_000_000
 
     def limit_fn(
@@ -47,49 +180,41 @@ def make_rate_limiter(limit: int, window_s: int):
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        win_start, admitted = state.get if state.exists else (None, 0)
-        # Grouping by key is the only ordering guarantee; a group that
+        users = _shard_users(state)
+        # Grouping by key is the only ordering guarantee; a shard that
         # spans several Arrow chunks can interleave, and the
         # window-anchor recurrence is order-sensitive — materialize
-        # the group and sort once (same hazard as ewma_fn below).
+        # the shard and sort once (same hazard as ewma_fn below).
         chunks = [c for c in pdfs if len(c)]
-        for pdf in ([pd.concat(chunks, ignore_index=True)] if chunks else []):
-            import numpy as np
-
-            pdf = pdf.sort_values(["ts", "event_id"])
-            ts_us = (pdf["ts"].astype("int64") // 1000).to_numpy()
-            n = len(ts_us)
-            keep = np.zeros(n, dtype=bool)
-            # windows anchor at their first event and admit the first
-            # `limit` rows before the next anchor — so the scan jumps
-            # window-by-window via searchsorted (iterations = number of
-            # WINDOWS in the batch, not number of rows; the per-row
-            # Python loop this replaces was the pipeline's hot spot)
-            i = 0
-            if win_start is not None:
-                # continue the window left open by the previous batch
-                j = int(np.searchsorted(ts_us, win_start + window_us, "left"))
-                room = limit - admitted
-                if room > 0:
-                    k = min(room, j - i)
-                    keep[i : i + k] = True
-                    admitted += k
-                i = j
-            while i < n:
-                win_start = int(ts_us[i])
-                j = int(np.searchsorted(ts_us, win_start + window_us, "left"))
-                admitted = min(limit, j - i)
-                keep[i : i + admitted] = True
-                i = j
+        if chunks:
+            pdf = pd.concat(chunks, ignore_index=True)
+            uid = pdf["user_id"].to_numpy(np.int64)
+            is_null = pdf["user_null"].to_numpy(bool)
+            keep, users = _admit(
+                uid,
+                is_null,
+                pdf["ts"].astype("int64").to_numpy() // 1000,
+                pdf["event_id"].to_numpy(),
+                users,
+                limit,
+                window_us,
+            )
             if keep.any():
-                yield pdf[keep]
-        state.update((win_start, admitted))
-        if win_start is not None:
-            # evict once the watermark passes the window end
-            state.setTimeoutTimestamp((win_start + window_us) // 1000)
+                out = pdf.loc[keep, _RATE_COLS]
+                if is_null[keep].any():
+                    out = out.assign(
+                        user_id=pd.arrays.IntegerArray(uid[keep], is_null[keep])
+                    )
+                yield out
+        # evict per user: rows at or below the watermark are dropped as
+        # late, so a window that ended there can admit nothing more
+        open_ = users[2] + window_us > state.getCurrentWatermarkMs() * 1000
+        users = tuple(a[open_] for a in users)
+        if not len(users[0]):
+            state.remove()
+            return
+        state.update(_state_value(users))
+        state.setTimeoutTimestamp(int(users[2].min() + window_us) // 1000)
 
     return limit_fn
 
@@ -103,19 +228,38 @@ def rate_limit_stream(
     """First-event-anchored rate limit over a stream. ``events`` must
     carry event-time column ``ts``. Pass ``watermark=None`` when an
     upstream operator already declared one (Spark disallows
-    redefinition past a stateful operator)."""
+    redefinition past a stateful operator).
+
+    State is keyed by ``pmod(xxhash64(user_id), RATE_SHARDS)``: each
+    trigger makes one kernel call and one state write per touched
+    shard, and ``numRowsTotal`` is at most RATE_SHARDS. Inside a shard,
+    eviction stays per user: each call drops the users whose window
+    ended at or below the watermark and re-arms the event-time timeout
+    at the earliest remaining window end; a timed-out call does the
+    same, or removes the shard's state once no window is open. Rows
+    with a NULL ``user_id`` share one window, as one user. A checkpoint
+    of the per-user limiter (keyed by ``user_id``) cannot be restarted
+    with this one: Spark refuses the changed key and state schema."""
+    from pyspark.sql import functions as F
+
     if watermark is not None:
         events = events.withWatermark("ts", watermark)
-    return (
-        events.groupBy("user_id")
-        .applyInPandasWithState(
-            make_rate_limiter(limit, window_s),
-            RATE_OUTPUT_SCHEMA,
-            RATE_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
+    uid = F.col("user_id")
+    keyed = events.withColumns(
+        {
+            "user_id": F.coalesce(uid, F.lit(0).cast("long")),
+            "user_null": uid.isNull(),
+            "shard": F.pmod(F.xxhash64(uid), F.lit(RATE_SHARDS)).cast("int"),
+        }
     )
+    return keyed.groupBy("shard").applyInPandasWithState(
+        make_rate_limiter(limit, window_s),
+        RATE_OUTPUT_SCHEMA,
+        RATE_STATE_SCHEMA,
+        "append",
+        GroupStateTimeout.EventTimeTimeout,
+    )
+
 
 EWMA_OUTPUT_SCHEMA = (
     "user_id long, event_id long, ts_us long, ewma double"

@@ -158,15 +158,17 @@ def test_results_invariant_to_shuffle_partition_count(spark, sf_dir):
 
 def test_streaming_state_is_bounded_by_eviction(spark, sf_dir, tmp_path):
     """The 100 TB streaming claim is bounded state: after a full
-    replay through the stateful rate limiter, the state store must
-    hold at most one entry per user (event-time timeout evicts idle
-    windows) — NOT one per event. Asserted from the engine's own
-    stateOperators progress metrics."""
+    replay through the pipeline, the rate limiter's state store holds
+    at most one row per user shard (RATE_SHARDS rows, each holding only
+    the users whose window is still open) and the dedup store far
+    fewer rows than events — NOT one per event. Asserted from the
+    engine's own stateOperators progress metrics."""
     from pyspark.sql import functions as F
 
     from eventstream_notify_spark.catalog import table
     from eventstream_notify_spark.sources.events import file_events_stream
     from eventstream_notify_spark.streaming.pipeline import start_pipeline
+    from eventstream_notify_spark.streaming.state import RATE_SHARDS
 
     n_users = table(spark, sf_dir, "events").select("user_id").distinct().count()
     n_events = table(spark, sf_dir, "events").count()
@@ -187,9 +189,14 @@ def test_streaming_state_is_bounded_by_eviction(spark, sf_dir, tmp_path):
     assert states, "no stateful operators reported"
     for op in states:
         total = op["numRowsTotal"]
-        # dedup state is watermark-bounded (recent events only), the
-        # rate limiter keys by user: both far below one-row-per-event
+        # dedup state is watermark-bounded (recent events only): far
+        # below one-row-per-event
         assert total <= n_users + n_events * 0.2, (
             f"{op['operatorName']}: {total} state rows for "
             f"{n_events} events / {n_users} users — eviction broken?"
         )
+    limiter = [
+        op for op in states if op["operatorName"] == "applyInPandasWithState"
+    ]
+    assert len(limiter) == 1
+    assert limiter[0]["numRowsTotal"] <= RATE_SHARDS

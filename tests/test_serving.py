@@ -5,11 +5,19 @@ websocket_server.py /ws replay+subscribe)."""
 
 from __future__ import annotations
 
+import io
 import json
 import socket
+import struct
 import urllib.request
 
-from eventstream_notify_spark.serving import EventsHttpServer, ServingHub
+import pytest
+
+from eventstream_notify_spark.serving import (
+    EventsHttpServer,
+    ServingHub,
+    ws_read_frame,
+)
 
 
 def _get_json(port: int, path: str):
@@ -351,3 +359,30 @@ def test_dashboard_page_served():
                 assert panel in page
     finally:
         srv.stop()
+
+
+def _client_frame(payload: bytes, opcode: int = 0x1) -> bytes:
+    """A masked client frame, with the extended length a size needs."""
+    n = len(payload)
+    if n < 126:
+        hdr = struct.pack("!BB", 0x80 | opcode, 0x80 | n)
+    elif n < 1 << 16:
+        hdr = struct.pack("!BBH", 0x80 | opcode, 0x80 | 126, n)
+    else:
+        hdr = struct.pack("!BBQ", 0x80 | opcode, 0x80 | 127, n)
+    mask = b"\x11\x22\x33\x44"
+    return hdr + mask + bytes(c ^ mask[i % 4] for i, c in enumerate(payload))
+
+
+@pytest.mark.parametrize("size", [5, 300, 70_000])
+def test_ws_read_frame_round_trip_and_every_truncation(size):
+    """A whole masked frame decodes; the same frame cut at any byte --
+    inside the 2- or 8-byte extended length, the mask or the payload --
+    reads as EOF, (None, b''), never an exception."""
+    payload = bytes(i % 251 for i in range(size))
+    frame = _client_frame(payload)
+    assert ws_read_frame(io.BytesIO(frame)) == (0x1, payload)
+    header = len(frame) - size
+    for cut in [*range(header + 1), len(frame) - 1]:
+        assert ws_read_frame(io.BytesIO(frame[:cut])) == (None, b""), cut
+    assert ws_read_frame(io.BytesIO(bytes([0x81, 0xFE, 0x01]))) == (None, b"")

@@ -248,12 +248,15 @@ def test_parse_wire_events_corrupt_path(spark):
 
 
 class _FakeState:
-    """Minimal GroupState double for driving stateful kernels directly."""
+    """Minimal GroupState double for driving stateful kernels directly:
+    the watermark is set by the test, the armed timeout is recorded."""
 
-    def __init__(self):
+    def __init__(self, watermark_ms=0):
         self.exists = False
         self.hasTimedOut = False
         self._v = None
+        self.watermark_ms = watermark_ms
+        self.timeout_ms = None
 
     @property
     def get(self):
@@ -265,9 +268,13 @@ class _FakeState:
 
     def remove(self):
         self._v, self.exists = None, False
+        self.timeout_ms = None
 
-    def setTimeoutTimestamp(self, _ms):
-        pass
+    def getCurrentWatermarkMs(self):
+        return self.watermark_ms
+
+    def setTimeoutTimestamp(self, ms):
+        self.timeout_ms = ms
 
 
 def test_stream_ewma_kernel_multibatch_equals_whole_window():
@@ -454,3 +461,224 @@ def test_cep_buffered_matches_ordered_on_ordered_source(spark, tmp_path):
         ).collect()
     )
     assert buffered == ordered == [(1, 3)]
+
+
+# ------------------------------------------- sharded rate-limit kernel
+
+S = 1_000_000  # µs per second
+
+
+def _rate_frame(rows, shard=0):
+    """Limiter input rows as rate_limit_stream hands them to the
+    kernel: (event_id, ts_us, user or None) -> the event columns plus
+    the ``user_null`` flag and ``shard`` key."""
+    import numpy as np
+
+    ids, ts_us, users = zip(*rows) if rows else ((), (), ())
+    return pd.DataFrame(
+        {
+            "event_id": np.asarray(ids, dtype=np.int64),
+            "ts": pd.to_datetime(np.asarray(ts_us, dtype=np.int64) * 1000),
+            "user_id": np.asarray(
+                [0 if u is None else u for u in users], dtype=np.int64
+            ),
+            "event_type": "click",
+            "value": 1.0,
+            "props": '{"k": 1}',
+            "user_null": np.asarray([u is None for u in users], dtype=bool),
+            "shard": np.full(len(ids), shard, dtype=np.int32),
+        }
+    )
+
+
+def _limit_call(fn, state, rows, shard=0):
+    out = list(fn((shard,), iter([_rate_frame(rows, shard)]), state))
+    return pd.concat(out, ignore_index=True) if out else None
+
+
+def _admitted_reference(rows, limit, window_us):
+    """The per-user recurrence, row by row (INCR + EXPIRE-on-first): a
+    window opens at a user's first event, admits ``limit`` events, and
+    the first event at or past ``window_us`` later opens the next.
+    NULL users are one user."""
+    keyed = sorted(
+        rows, key=lambda r: (r[2] is None, r[2] or 0, r[1], r[0])
+    )
+    kept, user, anchor, count = set(), object(), 0, 0
+    for eid, t, u in keyed:
+        if u != user or t >= anchor + window_us:
+            user, anchor, count = u, t, 0
+        if count < limit:
+            kept.add(eid)
+        count += 1
+    return kept
+
+
+@pytest.mark.parametrize("seed", [0, 1, 2])
+def test_rate_kernel_matches_per_user_reference(seed):
+    """Zipf users (some NULL) over a stream cut into random
+    micro-batches, each shard's rows split into random Arrow-like
+    chunks, the watermark trailing the newest event by 60 s and every
+    due timeout fired as Spark would: the admitted set equals the
+    per-user reference over the whole stream."""
+    import numpy as np
+
+    from eventstream_notify_spark.streaming.state import make_rate_limiter
+
+    rng = np.random.default_rng(seed)
+    limit, window_us, delay_us, n = 3, 20 * S, 60 * S, 4_000
+    # stamps rise across batches (the limiter folds each batch after
+    # the previous ones, like the reference's Redis INCR); rows inside a
+    # batch arrive shuffled. Nothing is at or below the watermark.
+    ts = np.sort(rng.integers(1_000 * S, 1_400 * S, n))
+    users = [
+        None if z % 97 == 0 else int(z) for z in np.minimum(rng.zipf(1.4, n), 3_000)
+    ]
+    rows = list(zip(range(n), ts.tolist(), users))
+    fn = make_rate_limiter(limit, window_us // S)
+    states = {}
+    got = set()
+    cuts = np.sort(rng.choice(np.arange(1, n), size=25, replace=False))
+    wm_ms = 0
+    for batch in np.split(np.arange(n), cuts):
+        by_shard = {}
+        for i in batch:
+            u = rows[i][2]
+            by_shard.setdefault(0 if u is None else u % 5, []).append(rows[i])
+        for shard, part in by_shard.items():
+            st = states.setdefault(shard, _FakeState())
+            st.watermark_ms, st.hasTimedOut = wm_ms, False
+            frame = _rate_frame(part, shard).sample(frac=1.0, random_state=seed)
+            cut = sorted(rng.integers(0, len(frame), rng.integers(0, 3)))
+            chunks = [frame.iloc[a:b] for a, b in zip([0, *cut], [*cut, None])]
+            for out in fn((shard,), iter(chunks), st):
+                assert list(out.columns) == [
+                    "event_id", "ts", "user_id", "event_type", "value", "props"
+                ]
+                got.update(out["event_id"].tolist())
+        wm_ms = max(wm_ms, (int(ts[batch].max()) - delay_us) // 1000)
+        for shard, st in states.items():
+            if st.exists and st.timeout_ms < wm_ms:
+                st.watermark_ms, st.hasTimedOut = wm_ms, True
+                assert list(fn((shard,), iter([]), st)) == []
+    assert got == _admitted_reference(rows, limit, window_us)
+    kept_users = sum(len(st.get[0]) for st in states.values() if st.exists)
+    assert kept_users < len(set(users))  # eviction ran
+
+
+def test_rate_kernel_window_continues_across_batches():
+    from eventstream_notify_spark.streaming.state import make_rate_limiter
+
+    fn, st = make_rate_limiter(5, 60), _FakeState()
+    out = _limit_call(fn, st, [(i, (10 + i) * S, 7) for i in range(3)])
+    assert out["event_id"].tolist() == [0, 1, 2]
+    assert st.get == ([7], [10 * S], [3])
+    # same window (ends at 70 s): 2 more admitted, then it is full
+    out = _limit_call(fn, st, [(i, (10 + i) * S, 7) for i in range(3, 9)])
+    assert out["event_id"].tolist() == [3, 4]
+    assert st.get == ([7], [10 * S], [5])
+    assert st.timeout_ms == 70_000
+    assert _limit_call(fn, st, [(9, 69 * S, 7)]) is None
+
+
+def test_rate_kernel_reanchors_after_window_end():
+    from eventstream_notify_spark.streaming.state import make_rate_limiter
+
+    fn, st = make_rate_limiter(2, 60), _FakeState()
+    _limit_call(fn, st, [(1, 10 * S, 7), (2, 20 * S, 7), (3, 30 * S, 7)])
+    # 70 s is the first event at or past the window end: it anchors the
+    # next window [70 s, 130 s), which admits 71 s and drops 72 s
+    out = _limit_call(
+        fn, st, [(4, 69 * S, 7), (5, 70 * S, 7), (6, 71 * S, 7), (7, 72 * S, 7)]
+    )
+    assert sorted(out["event_id"].tolist()) == [5, 6]
+    assert st.get == ([7], [70 * S], [2])
+    assert st.timeout_ms == 130_000
+
+
+def test_rate_kernel_evicts_ended_windows_and_rearms_timeout():
+    """Eviction is per user inside the shard: windows ending at or
+    below the watermark go, the timeout re-arms at the earliest
+    remaining end, and the shard's state is removed once empty."""
+    from eventstream_notify_spark.streaming.state import make_rate_limiter
+
+    fn, st = make_rate_limiter(5, 60), _FakeState()
+    _limit_call(fn, st, [(1, 30 * S, 3), (2, 0 * S + 1, 1), (3, 10 * S, 2)])
+    assert st.get == ([1, 2, 3], [1, 10 * S, 30 * S], [1, 1, 1])
+    assert st.timeout_ms == 60_000  # user 1's window ends first
+    # user 2's window ends exactly at the watermark: evicted with user 1
+    st.watermark_ms, st.hasTimedOut = 70_000, True
+    assert list(fn((0,), iter([]), st)) == []
+    assert st.get == ([3], [30 * S], [1])
+    assert st.timeout_ms == 90_000
+    # a data call prunes too, before writing the touched shard
+    st.watermark_ms, st.hasTimedOut = 89_999, False
+    _limit_call(fn, st, [(4, 150 * S, 4)])
+    assert st.get == ([3, 4], [30 * S, 150 * S], [1, 1])
+    st.watermark_ms, st.hasTimedOut = 210_000, True
+    assert list(fn((0,), iter([]), st)) == []
+    assert not st.exists and st.get is None
+
+
+def test_rate_kernel_null_users_share_one_window():
+    """NULL user_id rows are limited as one user -- distinct from user
+    0, whose id the NULLs carry in the kernel's input -- and come out
+    NULL again."""
+    from eventstream_notify_spark.streaming.state import make_rate_limiter
+
+    fn, st = make_rate_limiter(3, 60), _FakeState()
+    rows = [(i, (i + 1) * S, None if i % 2 else 0) for i in range(10)]
+    out = _limit_call(fn, st, rows)
+    assert sorted(out["event_id"].tolist()) == [0, 1, 2, 3, 4, 5]
+    nulls = out[out["user_id"].isna()]
+    assert sorted(nulls["event_id"].tolist()) == [1, 3, 5]
+    assert out.loc[out["user_id"].notna(), "user_id"].tolist() == [0, 0, 0]
+    # the NULL user is stored last, as a None id, and continues
+    assert st.get == ([0, None], [1 * S, 2 * S], [3, 3])
+    out = _limit_call(fn, st, [(20, 30 * S, None), (21, 70 * S, None)])
+    assert out["event_id"].tolist() == [21]
+    assert st.get == ([0, None], [1 * S, 70 * S], [3, 1])
+
+
+def test_stateful_rate_limit_exact_ids_beside_null_users(spark, tmp_path):
+    """Ids above 2**53 that share a shard with NULL user_id rows keep
+    every bit (a NULL in an int64 Arrow column would make it float64),
+    NULL rows share one window, and the stream's output has no helper
+    columns."""
+    from eventstream_notify_spark.streaming.state import RATE_SHARDS
+
+    shard = F.pmod(F.xxhash64(F.col("user_id")), F.lit(RATE_SHARDS))
+    null_shard = (
+        spark.range(1).select(F.lit(None).cast("long").alias("user_id"))
+        .select(shard).first()[0]
+    )
+    big = [
+        r.user_id
+        for r in spark.range(2_000)
+        .select((F.col("id") + F.lit(2**60)).alias("user_id"))
+        .where(shard == null_shard)
+        .limit(2)
+        .collect()
+    ]
+    path = str(tmp_path / "src")
+    rows = [
+        ev(k * 100 + i, i, u) for k, u in enumerate(big + [None]) for i in range(8)
+    ]
+    write_batch(spark, path, rows, 0)
+    out = run_bounded(
+        rate_limit_stream(stream_from(spark, path), limit=5, window_s=60)
+    )
+    assert out.columns == [
+        "event_id", "ts", "user_id", "event_type", "value", "props"
+    ]
+    got = sorted(
+        ((r.user_id is None, r.user_id or 0), r.event_id)
+        for r in out.collect()
+    )
+    want = sorted(
+        ((u is None, u or 0), k * 100 + i)
+        for k, u in enumerate(big + [None])
+        for i in range(5)
+    )
+    assert len(big) == 2 and got == want
+
