@@ -9,11 +9,15 @@ Parity targets (VERDICT r5 "What's missing" #1/#2):
   LEXICOGRAPHICALLY sorted last 50 ``event:*`` payloads, then forward
   the pub/sub channel live; same replay semantics including the
   lexicographic quirk that ``replay_last_n`` pins,
-  operators/events.py:250).
+  operators/events.py:250). ``last_n=0`` replays nothing; a negative
+  or non-integer value is a 400.
 - ``GET /ws?last_n=N`` — the SAME replay-then-tail over a real
   RFC 6455 WebSocket (stdlib-only handshake + frame codec), so the
   reference's actual client protocol connects directly: text frames,
   ping/pong keep-alive, close-frame echo.
+- ``GET /stats`` — the dashboard aggregates (total events, events per
+  user, distinct users, events per minute), kept by the hub at publish
+  time and served as a body cached per publish.
 - ``GET /`` — the static dashboard page (static/dashboard.html): the
   repo counterpart of the reference's React dashboard (WebUI.jpg; the
   reference's dashboard/ directory itself is empty), consuming ``/ws``
@@ -23,9 +27,12 @@ The hub is the in-process stand-in for Redis: the keyed SET store
 plus the PUBLISH fan-out (reference: auto_kafka_redis.py:370-380).
 ``ServingHub.sink`` is a ``foreachBatch`` adapter — each accepted
 micro-batch is SET + PUBLISHed exactly like the reference's per-batch
-Redis pipeline flush. Serving reads driver-side state bounded by the
-store size (the reference's Redis holds the same); the data plane
-(dedup, rate limit, upsert) stays fully distributed upstream.
+Redis pipeline flush; a retried epoch is not published twice.
+Serving reads driver-side state bounded by the store size (the
+reference's Redis holds the same), and each subscriber's queue is
+bounded: a stalled client is dropped, not buffered without limit. The
+data plane (dedup, rate limit, upsert) stays fully distributed
+upstream.
 """
 
 from __future__ import annotations
@@ -98,35 +105,142 @@ def ws_read_frame(rfile) -> tuple[int | None, bytes]:
     return opcode, bytes(c ^ mask[i % 4] for i, c in enumerate(data))
 
 
+# A subscriber's queue holds at most this many frames; on overflow the
+# hub drops the subscriber and its handler closes the connection. The
+# live workload publishes at most ~2.1k rows a trigger, so a reading
+# client never comes near the bound: only one that has stalled for ~30
+# triggers does, and it then holds ~10 MB of frames, not the whole
+# stream.
+SUB_QUEUE_MAX = 1 << 16
+
+
+def _user_minute(payload: str) -> tuple[str, int]:
+    """The dashboard's grouping of one wire payload: the user as a
+    string (``"None"`` for a missing or NULL ``user_id``) and the
+    epoch minute of ``timestamp`` (0 when it is missing). Raises on a
+    payload that is not a JSON object with a numeric timestamp."""
+    e = json.loads(payload)
+    return str(e.get("user_id")), int(float(e.get("timestamp", 0)) // 60)
+
+
+def _bump(counts: dict, key, delta: int) -> None:
+    """Add ``delta`` to one counter; a counter at 0 is deleted, so the
+    number of entries is the number of distinct keys."""
+    n = counts.get(key, 0) + delta
+    if n:
+        counts[key] = n
+    else:
+        del counts[key]
+
+
+class Subscription(queue.Queue):
+    """One subscriber's frame queue, bounded by ``SUB_QUEUE_MAX``.
+    ``dropped`` turns True when the hub gives up on the subscriber; the
+    queue is emptied and ``on_drop`` (the handler's hang-up) runs."""
+
+    def __init__(self, on_drop=None) -> None:
+        super().__init__(SUB_QUEUE_MAX)
+        self.dropped = False
+        self._on_drop = on_drop
+
+    def _drop(self) -> None:
+        self.dropped = True
+        with self.mutex:
+            self.queue.clear()
+        if self._on_drop is not None:
+            self._on_drop()
+
+
 class ServingHub:
-    """Keyed payload store + subscriber fan-out (the Redis stand-in)."""
+    """Keyed payload store + subscriber fan-out (the Redis stand-in).
+
+    The dashboard aggregates (events per user and per minute) are kept
+    at publish time: ``publish`` parses each payload once and moves the
+    counters, taking back an overwritten key's old user and minute. So
+    a publish costs O(batch), and ``stats`` rebuilds its body from the
+    counters, O(users), only on the first read after a publish; every
+    other read serves the cached bytes. ``last_n`` likewise sorts the
+    keys once per publish, not once per connection."""
 
     def __init__(self) -> None:
         self._store: dict[str, str] = {}
-        self._subs: list[queue.Queue] = []
+        self._groups: dict[str, tuple[str, int]] = {}  # key -> (user, minute)
+        self._per_user: dict[str, int] = {}
+        self._per_min: dict[int, int] = {}
+        self._version = 0
+        self._stats: tuple[int, bytes] | None = None
+        self._sorted: tuple[int, list[str]] | None = None
+        self._subs: list[Subscription] = []
+        self._epochs: dict[str | None, int] = {}
+        self.dropped_subscribers = 0
         self._lock = threading.Lock()
 
     # -- producer side -------------------------------------------------
 
     def publish(self, items: list[tuple[str, str]]) -> None:
-        """SET event:{id} = payload + PUBLISH to every subscriber."""
+        """SET event:{id} = payload + PUBLISH to every subscriber.
+
+        The whole batch is parsed before anything changes, so a
+        payload that ``_user_minute`` rejects raises and leaves the hub
+        as it was. Fan-out never blocks: a subscriber whose queue is
+        full is dropped (and counted in ``dropped_subscribers``)."""
+        parsed = [
+            (f"event:{key}", payload, _user_minute(payload))
+            for key, payload in items
+        ]
+        if not parsed:
+            return
         with self._lock:
-            for key, payload in items:
-                self._store[f"event:{key}"] = payload
+            for key, payload, (user, minute) in parsed:
+                old = self._groups.get(key)
+                if old is not None:
+                    _bump(self._per_user, old[0], -1)
+                    _bump(self._per_min, old[1], -1)
+                self._store[key] = payload
+                self._groups[key] = (user, minute)
+                _bump(self._per_user, user, 1)
+                _bump(self._per_min, minute, 1)
+            self._version += 1
             subs = list(self._subs)
-        for q in subs:
-            for _, payload in items:
-                q.put(payload)
+        full = []
+        for sub in subs:
+            try:
+                for _, payload in items:
+                    sub.put_nowait(payload)
+            except queue.Full:
+                full.append(sub)
+        if full:
+            with self._lock:
+                for sub in full:
+                    if sub in self._subs:
+                        self._subs.remove(sub)
+                        self.dropped_subscribers += 1
+            for sub in full:
+                sub._drop()
 
     def sink(self, batch_df, epoch_id: int) -> None:
         """foreachBatch adapter: wire-serialize the accepted batch and
         publish it — the reference's per-batch Redis pipeline flush.
         Batches are micro-batches (the reference's is 32 events), so
-        the driver-side collect is bounded by trigger size."""
+        the driver-side collect is bounded by trigger size.
+
+        An epoch at or below the last one this hub published for the
+        same query (Spark's query id, which survives a restart on the
+        same checkpoint) is not published again: a retried epoch
+        notifies nobody twice. It still runs, because Spark fails a
+        micro-batch whose state stores did not all commit."""
         from eventstream_notify_spark.sources.events import to_wire
 
+        query = batch_df.sparkSession.sparkContext.getLocalProperty(
+            "sql.streaming.queryId"
+        )
         rows = to_wire(batch_df).collect()
+        with self._lock:
+            if epoch_id <= self._epochs.get(query, -1):
+                return
         self.publish([(r["key"], r["value"]) for r in rows])
+        with self._lock:
+            self._epochs[query] = epoch_id
 
     # -- consumer side -------------------------------------------------
 
@@ -135,24 +249,48 @@ class ServingHub:
         with self._lock:
             return list(self._store.values())
 
+    def stats(self) -> tuple[int, bytes]:
+        """``(version, body)`` of ``GET /stats``: the dashboard's data
+        feeds (C1-C4: total, per-user, distinct users, rate/min) — the
+        serving-side mirror of the distributed agg_* queries, sized by
+        users, not by history. The body is built from the counters on
+        the first read after a publish and cached until the next."""
+        with self._lock:
+            if self._stats is None or self._stats[0] != self._version:
+                per_min = sorted(self._per_min.items())
+                body = json.dumps(
+                    {
+                        "total_events": len(self._store),
+                        "distinct_users": len(self._per_user),
+                        "events_per_user": dict(sorted(self._per_user.items())),
+                        "events_per_minute": {str(k * 60): v for k, v in per_min},
+                    }
+                ).encode()
+                self._stats = (self._version, body)
+            return self._stats
+
     def last_n(self, n: int) -> list[str]:
         """The reference's replay buffer: LEXICOGRAPHIC key sort, last
         n — 'event:99' sorts after 'event:100' (the quirk
-        replay_last_n pins)."""
+        replay_last_n pins). ``n <= 0`` replays nothing."""
+        if n <= 0:
+            return []
         with self._lock:
-            keys = sorted(self._store)[-n:]
-            return [self._store[k] for k in keys]
+            if self._sorted is None or self._sorted[0] != self._version:
+                self._sorted = (self._version, sorted(self._store))
+            return [self._store[k] for k in self._sorted[1][-n:]]
 
-    def subscribe(self) -> queue.Queue:
-        q: queue.Queue = queue.Queue()
+    def subscribe(self, on_drop=None) -> Subscription:
+        """A new live subscriber; ``on_drop`` runs if the hub drops it."""
+        sub = Subscription(on_drop)
         with self._lock:
-            self._subs.append(q)
-        return q
+            self._subs.append(sub)
+        return sub
 
-    def unsubscribe(self, q: queue.Queue) -> None:
+    def unsubscribe(self, sub: Subscription) -> None:
         with self._lock:
-            if q in self._subs:
-                self._subs.remove(q)
+            if sub in self._subs:
+                self._subs.remove(sub)
 
 
 def _make_handler(hub: ServingHub):
@@ -173,57 +311,14 @@ def _make_handler(hub: ServingHub):
                 self.wfile.write(body)
                 return
             if parsed.path == "/stats":
-                # the dashboard's data feeds (C1-C4: total, per-user,
-                # distinct users, rate/min) computed over the hub
-                # store — the serving-side mirror of the distributed
-                # agg_* queries, sized by state not by history
-                events = [json.loads(p) for p in hub.snapshot()]
-                per_user: dict[str, int] = {}
-                per_min: dict[int, int] = {}
-                for e in events:
-                    u = str(e.get("user_id"))
-                    per_user[u] = per_user.get(u, 0) + 1
-                    m = int(float(e.get("timestamp", 0)) // 60)
-                    per_min[m] = per_min.get(m, 0) + 1
-                body = json.dumps(
-                    {
-                        "total_events": len(events),
-                        "distinct_users": len(per_user),
-                        "events_per_user": dict(
-                            sorted(per_user.items())
-                        ),
-                        "events_per_minute": {
-                            str(k * 60): v
-                            for k, v in sorted(per_min.items())
-                        },
-                    }
-                ).encode()
-                self.send_response(200)
-                self.send_header("Content-Type", "application/json")
-                self.send_header("Access-Control-Allow-Origin", "*")
-                self.send_header("Content-Length", str(len(body)))
-                self.end_headers()
-                self.wfile.write(body)
+                self._json(hub.stats()[1])
                 return
             if parsed.path == "/events":
-                body = json.dumps(
-                    [json.loads(p) for p in hub.snapshot()]
-                ).encode()
-                self.send_response(200)
-                self.send_header("Content-Type", "application/json")
-                self.send_header("Access-Control-Allow-Origin", "*")
-                self.send_header("Content-Length", str(len(body)))
-                self.end_headers()
-                self.wfile.write(body)
+                self._json(("[" + ", ".join(hub.snapshot()) + "]").encode())
                 return
             if parsed.path == "/stream":
-                try:
-                    n = int(
-                        parse_qs(parsed.query).get("last_n", ["50"])[0]
-                    )
-                except ValueError:
-                    self.send_response(400)
-                    self.end_headers()
+                n = self._last_n(parsed)
+                if n is None:
                     return
                 self.send_response(200)
                 self.send_header("Content-Type", "text/event-stream")
@@ -234,18 +329,18 @@ def _make_handler(hub: ServingHub):
                 # between replay and subscribe would otherwise be lost
                 # (the reference subscribes after replay and accepts
                 # that race; we close it)
-                sub = hub.subscribe()
+                sub = hub.subscribe(self._hang_up)
                 try:
                     for payload in hub.last_n(n):
                         self._sse(payload)
-                    while True:
+                    while not sub.dropped:
                         try:
                             payload = sub.get(timeout=1.0)
                         except queue.Empty:
                             self._sse_comment()  # keep-alive
                             continue
                         self._sse(payload)
-                except (BrokenPipeError, ConnectionResetError):
+                except OSError:
                     pass
                 finally:
                     hub.unsubscribe(sub)
@@ -273,11 +368,8 @@ def _make_handler(hub: ServingHub):
                 self.send_response(400)
                 self.end_headers()
                 return
-            try:
-                n = int(parse_qs(parsed.query).get("last_n", ["50"])[0])
-            except ValueError:
-                self.send_response(400)
-                self.end_headers()
+            n = self._last_n(parsed)
+            if n is None:
                 return
             # raw 101 (send_response would stamp HTTP/1.0, which
             # strict clients reject for an upgrade)
@@ -314,11 +406,11 @@ def _make_handler(hub: ServingHub):
 
             rt = threading.Thread(target=reader, daemon=True)
             rt.start()
-            sub = hub.subscribe()
+            sub = hub.subscribe(self._hang_up)
             try:
                 for payload in hub.last_n(n):
                     send(payload.encode())
-                while not closed.is_set():
+                while not closed.is_set() and not sub.dropped:
                     try:
                         payload = sub.get(timeout=1.0)
                     except queue.Empty:
@@ -334,11 +426,37 @@ def _make_handler(hub: ServingHub):
                 # join it before BaseHTTPRequestHandler tears the
                 # buffered streams down — two concurrent readers on
                 # one buffered socket corrupt both
-                try:
-                    self.connection.shutdown(socket.SHUT_RDWR)
-                except OSError:
-                    pass
+                self._hang_up()
                 rt.join(timeout=5.0)
+
+        def _last_n(self, parsed) -> int | None:
+            """The replay length of /stream and /ws (default 50); None
+            after answering 400 to a value that is not an integer >= 0."""
+            try:
+                n = int(parse_qs(parsed.query).get("last_n", ["50"])[0])
+            except ValueError:
+                n = -1
+            if n < 0:
+                self.send_response(400)
+                self.end_headers()
+                return None
+            return n
+
+        def _json(self, body: bytes) -> None:
+            self.send_response(200)
+            self.send_header("Content-Type", "application/json")
+            self.send_header("Access-Control-Allow-Origin", "*")
+            self.send_header("Content-Length", str(len(body)))
+            self.end_headers()
+            self.wfile.write(body)
+
+        def _hang_up(self) -> None:
+            """Shut the socket down from any thread: unblocks a write
+            stuck on a stalled client and the /ws reader's read."""
+            try:
+                self.connection.shutdown(socket.SHUT_RDWR)
+            except OSError:
+                pass
 
         def _sse(self, payload: str) -> None:
             self.wfile.write(f"data: {payload}\n\n".encode())

@@ -386,3 +386,313 @@ def test_ws_read_frame_round_trip_and_every_truncation(size):
     for cut in [*range(header + 1), len(frame) - 1]:
         assert ws_read_frame(io.BytesIO(frame[:cut])) == (None, b""), cut
     assert ws_read_frame(io.BytesIO(bytes([0x81, 0xFE, 0x01]))) == (None, b"")
+
+
+def _recount_stats(payloads: list[str]) -> bytes:
+    """The /stats body recounted from scratch over every payload: the
+    handler's per-request loop before the hub kept the aggregates."""
+    events = [json.loads(p) for p in payloads]
+    per_user: dict[str, int] = {}
+    per_min: dict[int, int] = {}
+    for e in events:
+        u = str(e.get("user_id"))
+        per_user[u] = per_user.get(u, 0) + 1
+        m = int(float(e.get("timestamp", 0)) // 60)
+        per_min[m] = per_min.get(m, 0) + 1
+    return json.dumps(
+        {
+            "total_events": len(events),
+            "distinct_users": len(per_user),
+            "events_per_user": dict(sorted(per_user.items())),
+            "events_per_minute": {
+                str(k * 60): v for k, v in sorted(per_min.items())
+            },
+        }
+    ).encode()
+
+
+def _random_payload(rng, i: int) -> str:
+    """A wire payload; some lack ``user_id``, some carry it as NULL or
+    as a number, some lack ``timestamp``."""
+    e: dict = {"id": i, "value": f"event-{i}"}
+    r = rng.random()
+    if r < 0.1:
+        pass
+    elif r < 0.2:
+        e["user_id"] = None
+    elif r < 0.3:
+        e["user_id"] = rng.randrange(5)
+    else:
+        e["user_id"] = f"user{rng.randrange(12)}"
+    if rng.random() < 0.9:
+        e["timestamp"] = 1_704_067_200 + rng.randrange(3600) + rng.random()
+    return json.dumps(e)
+
+
+def _get_bytes(port: int, path: str) -> bytes:
+    with urllib.request.urlopen(
+        f"http://127.0.0.1:{port}{path}", timeout=10
+    ) as resp:
+        return resp.read()
+
+
+@pytest.mark.parametrize("seed", [0, 1, 2])
+def test_incremental_stats_match_recount_after_random_upserts(seed):
+    """After every random batch of upserts (key overwrites, missing,
+    NULL and numeric users, missing timestamps), /stats is byte for
+    byte the from-scratch recount, /events parses to the stored
+    payloads, and last_n keeps the lexicographic order."""
+    import random
+
+    rng = random.Random(seed)
+    hub = ServingHub()
+    model: dict[str, str] = {}
+    srv = EventsHttpServer(hub)
+    port = srv.start()
+    try:
+        assert _get_bytes(port, "/stats") == _recount_stats([])
+        i = 0
+        for _ in range(30):
+            batch = []
+            for _ in range(rng.randrange(1, 12)):
+                key = str(rng.randrange(60))  # ~half the upserts overwrite
+                batch.append((key, _random_payload(rng, i)))
+                i += 1
+            hub.publish(batch)
+            for key, payload in batch:
+                model[f"event:{key}"] = payload
+            assert _get_bytes(port, "/stats") == _recount_stats(list(model.values()))
+            events = json.loads(_get_bytes(port, "/events"))
+            want = [json.loads(p) for p in model.values()]
+            assert sorted(map(json.dumps, events)) == sorted(map(json.dumps, want))
+            for n in (1, 7, 50, len(model) + 5):
+                assert hub.last_n(n) == [model[k] for k in sorted(model)[-n:]]
+    finally:
+        srv.stop()
+
+
+def test_publish_with_a_non_json_payload_raises_and_changes_nothing():
+    """The batch is parsed before the hub changes: one bad payload
+    fails the whole publish, and /stats, /events, last_n and the
+    subscribers see none of it."""
+    hub = ServingHub()
+    hub.publish(
+        [
+            (str(i), json.dumps({"id": i, "user_id": f"u{i % 2}", "timestamp": 60.0 * i}))
+            for i in range(5)
+        ]
+    )
+    sub = hub.subscribe()
+    srv = EventsHttpServer(hub)
+    port = srv.start()
+    try:
+        before = (
+            _get_bytes(port, "/stats"),
+            _get_bytes(port, "/events"),
+            hub.last_n(50),
+        )
+        with pytest.raises(ValueError):
+            hub.publish(
+                [
+                    ("1", json.dumps({"id": 1, "user_id": "u9", "timestamp": 1.0})),
+                    ("7", json.dumps({"id": 7, "user_id": "u7"})),
+                    ("8", "not json"),
+                ]
+            )
+        after = (
+            _get_bytes(port, "/stats"),
+            _get_bytes(port, "/events"),
+            hub.last_n(50),
+        )
+        assert after == before
+        assert sub.empty()
+    finally:
+        srv.stop()
+
+
+def _status_line(port: int, path: str, ws: bool) -> str:
+    s = socket.create_connection(("127.0.0.1", port), timeout=10)
+    upgrade = (
+        "Upgrade: websocket\r\nConnection: Upgrade\r\n"
+        "Sec-WebSocket-Key: MDEyMzQ1Njc4OWFiY2RlZg==\r\n"
+        "Sec-WebSocket-Version: 13\r\n"
+        if ws
+        else ""
+    )
+    s.sendall(f"GET {path} HTTP/1.1\r\nHost: x\r\n{upgrade}\r\n".encode())
+    buf = b""
+    while b"\r\n" not in buf:
+        chunk = s.recv(4096)
+        if not chunk:
+            break
+        buf += chunk
+    s.close()
+    return buf.split(b"\r\n", 1)[0].decode()
+
+
+def test_last_n_zero_replays_nothing_and_negative_is_400():
+    """``last_n=0`` replays nothing and goes straight to the live tail
+    (``sorted(keys)[-0:]`` used to replay the whole store); a negative
+    value is a 400 on both /ws and /stream (``[-1:]``-style slices
+    used to replay all but the first keys)."""
+    hub = ServingHub()
+    hub.publish([(str(i), json.dumps({"id": i})) for i in range(5)])
+    assert hub.last_n(0) == []
+    assert hub.last_n(-1) == []
+    assert len(hub.last_n(5)) == len(hub.last_n(9)) == 5
+    srv = EventsHttpServer(hub)
+    port = srv.start()
+    try:
+        for path in ("/stream?last_n=-1", "/stream?last_n=x"):
+            assert " 400 " in _status_line(port, path, ws=False), path
+        for path in ("/ws?last_n=-1", "/ws?last_n=x"):
+            assert " 400 " in _status_line(port, path, ws=True), path
+
+        import threading
+        import time
+
+        def late_publish():
+            time.sleep(0.5)
+            hub.publish([("live", json.dumps({"id": "live"}))])
+
+        t = threading.Thread(target=late_publish)
+        t.start()
+        got = _read_sse_events(port, "/stream?last_n=0", 1)
+        t.join()
+        assert got == [{"id": "live"}]
+
+        # the handler subscribes after the handshake: publish until the
+        # first live frame arrives, which must not be a replayed one
+        s = _ws_connect(port, "/ws?last_n=0")
+        received = threading.Event()
+
+        def publish_until_received():
+            while not received.wait(0.2):
+                hub.publish([("live2", json.dumps({"id": "live2"}))])
+
+        t = threading.Thread(target=publish_until_received)
+        t.start()
+        try:
+            while True:
+                op, data = _ws_recv_frame(s)
+                if op == 0x1:
+                    break
+        finally:
+            received.set()
+            t.join()
+        assert json.loads(data) == {"id": "live2"}
+        _ws_send(s, b"", 0x8)
+        s.close()
+    finally:
+        srv.stop()
+
+
+def test_stalled_subscriber_is_dropped_reader_gets_every_frame(monkeypatch):
+    """A subscriber that never reads is dropped once its bounded queue
+    is full (publish never blocks on it, the drop is counted and its
+    hang-up runs once), while a subscriber that keeps reading gets
+    every frame in order."""
+    import threading
+
+    from eventstream_notify_spark import serving
+
+    monkeypatch.setattr(serving, "SUB_QUEUE_MAX", 16)
+    hub = ServingHub()
+    hang_ups = []
+    stalled = hub.subscribe(lambda: hang_ups.append(1))
+    reader = hub.subscribe()
+    got: list[int] = []
+    want = 40 * 5
+
+    def read():
+        while len(got) < want:
+            got.append(json.loads(reader.get(timeout=10))["id"])
+
+    t = threading.Thread(target=read)
+    t.start()
+    for b in range(40):
+        hub.publish([(str(b * 5 + j), json.dumps({"id": b * 5 + j})) for j in range(5)])
+        # the reader keeps up: at most one batch in flight
+        while len(got) < (b + 1) * 5 and t.is_alive():
+            t.join(timeout=0.001)
+    t.join(timeout=10)
+    assert got == list(range(want))
+    assert stalled.dropped and stalled.empty()
+    assert not reader.dropped
+    assert hub.dropped_subscribers == 1
+    assert hang_ups == [1]
+
+
+def test_stalled_websocket_client_is_dropped_and_closed(monkeypatch):
+    """End to end: a /ws client that stops reading fills the socket
+    buffers and then its queue; the hub drops it and its handler
+    closes the connection, so the client reads to EOF."""
+    import time
+
+    from eventstream_notify_spark import serving
+
+    monkeypatch.setattr(serving, "SUB_QUEUE_MAX", 4)
+    hub = ServingHub()
+    srv = EventsHttpServer(hub)
+    port = srv.start()
+    try:
+        s = _ws_connect(port, "/ws?last_n=0")
+        deadline = time.time() + 30
+        i = 0
+        pad = "x" * (1 << 16)
+        while not hub.dropped_subscribers and time.time() < deadline:
+            hub.publish([(str(i), json.dumps({"id": i, "pad": pad}))])
+            i += 1
+        assert hub.dropped_subscribers == 1
+        s.s.settimeout(10)
+        while True:
+            chunk = s.recv(1 << 16)
+            if not chunk:
+                break
+        s.close()
+    finally:
+        srv.stop()
+
+
+def test_retried_epoch_is_not_renotified(spark, sf_dir, tmp_path):
+    """The sink fails after the hub published an epoch; the query is
+    restarted on the same checkpoint with the same hub and Spark runs
+    the epoch again. A subscriber still sees each key exactly once."""
+    from pyspark.errors import StreamingQueryException
+
+    from eventstream_notify_spark.sources.events import file_events_stream
+    from eventstream_notify_spark.streaming.pipeline import start_pipeline
+
+    hub = ServingHub()
+    sub = hub.subscribe()
+    calls: list[int] = []
+
+    def failing_once(batch_df, epoch_id):
+        hub.sink(batch_df, epoch_id)
+        calls.append(epoch_id)
+        if len(calls) == 1:
+            raise RuntimeError("injected failure after publish")
+
+    ckpt = str(tmp_path / "ckpt_retry")
+    for attempt in range(2):
+        q = start_pipeline(
+            file_events_stream(spark, sf_dir),
+            ckpt,
+            failing_once,
+            rate_window_s=86400,
+            rate_limit=10**9,
+            available_now=True,
+        )
+        if attempt == 0:
+            with pytest.raises(StreamingQueryException):
+                q.awaitTermination()
+        else:
+            q.awaitTermination()
+    assert calls[0] == calls[1], calls  # the failed epoch ran again
+    keys = []
+    while not sub.empty():
+        keys.append(str(json.loads(sub.get_nowait())["id"]))
+    assert len(keys) == len(set(keys)) > 0
+    assert {f"event:{k}" for k in keys} == {
+        f"event:{json.loads(p)['id']}" for p in hub.snapshot()
+    }
