@@ -118,7 +118,8 @@ def _user_minute(payload: str) -> tuple[str, int]:
     """The dashboard's grouping of one wire payload: the user as a
     string (``"None"`` for a missing or NULL ``user_id``) and the
     epoch minute of ``timestamp`` (0 when it is missing). Raises on a
-    payload that is not a JSON object with a numeric timestamp."""
+    payload that is not a JSON object, or whose ``timestamp`` is not a
+    number ``float()`` accepts."""
     e = json.loads(payload)
     return str(e.get("user_id")), int(float(e.get("timestamp", 0)) // 60)
 
@@ -143,7 +144,7 @@ class Subscription(queue.Queue):
         self.dropped = False
         self._on_drop = on_drop
 
-    def _drop(self) -> None:
+    def drop(self) -> None:
         self.dropped = True
         with self.mutex:
             self.queue.clear()
@@ -216,7 +217,7 @@ class ServingHub:
                         self._subs.remove(sub)
                         self.dropped_subscribers += 1
             for sub in full:
-                sub._drop()
+                sub.drop()
 
     def sink(self, batch_df, epoch_id: int) -> None:
         """foreachBatch adapter: wire-serialize the accepted batch and

@@ -597,7 +597,7 @@ def test_stalled_subscriber_is_dropped_reader_gets_every_frame(monkeypatch):
     from eventstream_notify_spark import serving
 
     monkeypatch.setattr(serving, "SUB_QUEUE_MAX", 16)
-    hub = ServingHub()
+    hub = serving.ServingHub()  # the class that reads the patched bound
     hang_ups = []
     stalled = hub.subscribe(lambda: hang_ups.append(1))
     reader = hub.subscribe()
@@ -632,23 +632,24 @@ def test_stalled_websocket_client_is_dropped_and_closed(monkeypatch):
     from eventstream_notify_spark import serving
 
     monkeypatch.setattr(serving, "SUB_QUEUE_MAX", 4)
-    hub = ServingHub()
-    srv = EventsHttpServer(hub)
+    hub = serving.ServingHub()  # the class that reads the patched bound
+    srv = serving.EventsHttpServer(hub)
     port = srv.start()
     try:
         s = _ws_connect(port, "/ws?last_n=0")
+        # 64 KiB frames: the socket buffers hold a few MB, so well
+        # under 1000 frames fill them and then the 4-frame queue
         deadline = time.time() + 30
-        i = 0
         pad = "x" * (1 << 16)
-        while not hub.dropped_subscribers and time.time() < deadline:
+        for i in range(1000):
+            if hub.dropped_subscribers or time.time() > deadline:
+                break
             hub.publish([(str(i), json.dumps({"id": i, "pad": pad}))])
-            i += 1
         assert hub.dropped_subscribers == 1
         s.s.settimeout(10)
-        while True:
-            chunk = s.recv(1 << 16)
-            if not chunk:
-                break
+        deadline = time.time() + 20  # keep-alive pings never end an open socket
+        while s.recv(1 << 16):
+            assert time.time() < deadline, "connection not closed"
         s.close()
     finally:
         srv.stop()
@@ -696,3 +697,55 @@ def test_retried_epoch_is_not_renotified(spark, sf_dir, tmp_path):
     assert {f"event:{k}" for k in keys} == {
         f"event:{json.loads(p)['id']}" for p in hub.snapshot()
     }
+
+
+def test_concurrent_publishers_and_readers_keep_exact_counts():
+    """Eight threads upsert overlapping keys while four read /stats and
+    last_n, with a tiny switch interval: a lost counter update would
+    leave the final body different from the recount."""
+    import random
+    import sys
+    import threading
+
+    hub = ServingHub()
+    errors: list[BaseException] = []
+    stop = threading.Event()
+
+    def publisher(seed):
+        rng = random.Random(seed)
+        try:
+            for b in range(40):
+                hub.publish(
+                    [
+                        (str(rng.randrange(100)), _random_payload(rng, seed * 1000 + b))
+                        for _ in range(5)
+                    ]
+                )
+        except BaseException as e:  # noqa: BLE001 — reported below
+            errors.append(e)
+
+    def reader():
+        try:
+            while not stop.is_set():
+                json.loads(hub.stats()[1])
+                hub.last_n(10)
+        except BaseException as e:  # noqa: BLE001 — reported below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        readers = [threading.Thread(target=reader) for _ in range(4)]
+        writers = [threading.Thread(target=publisher, args=(s,)) for s in range(8)]
+        for t in readers + writers:
+            t.start()
+        for t in writers:
+            t.join(timeout=60)
+        stop.set()
+        for t in readers:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in readers + writers)
+    assert not errors, errors
+    assert hub.stats()[1] == _recount_stats(hub.snapshot())
