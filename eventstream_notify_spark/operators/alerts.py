@@ -2,12 +2,14 @@
 "rule-based alerting" capability; pattern per 'A Hybrid Approach for
 Alarm Verification', EDBT 2018 — PAPERS.md).
 
-Rules are DATA, not code: a tiny dimension table of predicates that
-broadcast-joins against the event stream. Adding/changing a rule is a
-row insert, no redeploy. The streaming twin applies the same frame
-inside foreachBatch (streaming/pipeline.py) and lands fired alerts on
-the notification sink — the engine analogue of the reference's
-pub/sub fan-out (auto_kafka_redis.py:374).
+Rules are DATA, not code: a short list of (event_type guard, metric,
+op, threshold) predicates, evaluated against each event as a literal
+array of structs inside the query plan. Changing a rule edits
+ALERT_RULES (or passes another list), so a running stream picks it up
+on its next start, not mid-stream. The streaming twin applies the same
+frame inside foreachBatch (streaming/pipeline.py) and lands fired
+alerts on the notification sink — the engine analogue of the
+reference's pub/sub fan-out (auto_kafka_redis.py:374).
 """
 
 from __future__ import annotations
@@ -26,13 +28,7 @@ ALERT_RULES: list[tuple[int, str | None, str, str, float]] = [
     (3, "purchase", "value", "<", 10.0),
     (4, "click", "k", ">", 90.0),
 ]
-
-
-def rules_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        ALERT_RULES,
-        "rule_id int, rule_event_type string, metric string, op string, threshold double",
-    )
+_RULE_TYPE = "struct<rule_id int, rule_event_type string, metric string, op string, threshold double>"
 
 
 def _rules_values_sql() -> str:
@@ -44,11 +40,14 @@ def _rules_values_sql() -> str:
 
 
 def apply_rules(
-    events: DataFrame, rules: DataFrame, extra_cols: tuple[str, ...] = ()
+    events: DataFrame, rules=ALERT_RULES, extra_cols: tuple[str, ...] = ()
 ) -> DataFrame:
-    """Cross-apply the rule table to an event frame: broadcast join on
-    the optional event_type guard + predicate evaluation on the chosen
-    metric. Returns one row per (event, fired rule)."""
+    """Cross-apply the rules to an event frame: each event row is
+    paired with every rule by ``inline`` over a literal array of rule
+    structs (no join, no driver-built rule frame, no broadcast job),
+    then filtered on the optional event_type guard and the predicate
+    over the chosen metric. Returns one row per (event, fired rule)."""
+    rule_structs = F.array(*(F.struct(*map(F.lit, r)).cast(_RULE_TYPE) for r in rules))
     metric = F.when(F.col("metric") == "value", F.col("value")).otherwise(
         F.get_json_object("props", "$.k").cast("double")
     )
@@ -59,7 +58,7 @@ def apply_rules(
         F.col("rule_event_type") == F.col("event_type")
     )
     return (
-        events.crossJoin(F.broadcast(rules))
+        events.select("*", F.inline(rule_structs))
         .filter(type_ok & fired)
         .select(
             "rule_id",
@@ -149,6 +148,6 @@ def alert_rules_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def alert_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X9 — which events fire which rules (batch twin of the alerting
-    stream). One broadcast of a 4-row rule dim; the event side is
-    scanned once, never shuffled."""
-    return apply_rules(table(spark, sf_dir, "events"), rules_df(spark))
+    stream). The rules are literals in the plan; the event side is
+    scanned once, never shuffled or joined."""
+    return apply_rules(table(spark, sf_dir, "events"))

@@ -146,8 +146,16 @@ def start_pipeline(
     A checkpoint whose rate-limiter state predates the user-sharded
     limiter (state keyed by ``user_id``) cannot be restarted: its
     grouping key and state schema differ, and Spark refuses it with a
-    state-schema error. Start such a pipeline on a new checkpoint
-    directory; there is no migration."""
+    state-schema error. Nor can one written while the limiter armed an
+    event-time timeout: its stored state value carries a
+    ``timeoutTimestamp`` field, and Spark refuses the restart with
+    ``STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE``. Start such a pipeline
+    on a new checkpoint directory; there is no migration.
+
+    Late rows: the limiter runs without a timeout, so Spark's late-row
+    filter does not run inside it. The dedup stage drops them instead:
+    ``dropDuplicatesWithinWatermark`` discards rows at or below the
+    previous trigger's watermark before they reach the limiter."""
     admitted = rate_limit_stream(
         streaming_dedup(events, ttl),
         limit=rate_limit,
@@ -179,15 +187,13 @@ def notify_sink(store, alert_store):
     store AND evaluates the alert rules, landing fired notifications
     in a second keyed store (the 'channel'). Both writes are
     epoch-idempotent, so the composition stays exactly-once."""
-    from eventstream_notify_spark.operators.alerts import apply_rules, rules_df
+    from eventstream_notify_spark.operators.alerts import apply_rules
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         batch_df = batch_df.persist()
         try:
             store.upsert_batch(batch_df, epoch_id)
-            fired = apply_rules(
-                batch_df, rules_df(batch_df.sparkSession), extra_cols=("ts",)
-            )
+            fired = apply_rules(batch_df, extra_cols=("ts",))
             alert_store.upsert_batch(
                 fired.withColumn(
                     "alert_id",

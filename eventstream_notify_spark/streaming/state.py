@@ -8,10 +8,16 @@ Implemented with ``applyInPandasWithState`` keyed by a user SHARD,
 ``pmod(xxhash64(user_id), RATE_SHARDS)``, not by user: one Python call
 per touched shard per trigger instead of one per active user. A
 shard's state is parallel arrays (user_id, window_start_us,
-admitted_count) holding only the users whose window is still open;
-each call drops the users whose window ended at or below the
-watermark and arms the event-time timeout at the earliest remaining
-window end, so state stays bounded (SURVEY §2 scale notes).
+admitted_count) holding the users whose window was still open at the
+shard's last call. Eviction is lazy, like Redis expiring a key on
+access: each call that carries data drops the users whose window
+ended at or below the watermark. The limiter arms no timeout
+(``NoTimeout``), so Spark runs no timeout pass over the state, and
+state stays at most RATE_SHARDS rows (SURVEY §2 scale notes). A
+checkpoint written by the event-time-timeout limiter cannot be
+restarted with this one: its stored value carries a
+``timeoutTimestamp`` field, and Spark refuses the restart with
+``STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE``. There is no migration.
 """
 
 from __future__ import annotations
@@ -206,15 +212,14 @@ def make_rate_limiter(limit: int, window_s: int):
                         user_id=pd.arrays.IntegerArray(uid[keep], is_null[keep])
                     )
                 yield out
-        # evict per user: rows at or below the watermark are dropped as
-        # late, so a window that ended there can admit nothing more
+        # evict per user: late rows are dropped upstream, so a window
+        # that ended at or below the watermark can admit nothing more
         open_ = users[2] + window_us > state.getCurrentWatermarkMs() * 1000
         users = tuple(a[open_] for a in users)
         if not len(users[0]):
             state.remove()
             return
         state.update(_state_value(users))
-        state.setTimeoutTimestamp(int(users[2].min() + window_us) // 1000)
 
     return limit_fn
 
@@ -234,12 +239,24 @@ def rate_limit_stream(
     trigger makes one kernel call and one state write per touched
     shard, and ``numRowsTotal`` is at most RATE_SHARDS. Inside a shard,
     eviction stays per user: each call drops the users whose window
-    ended at or below the watermark and re-arms the event-time timeout
-    at the earliest remaining window end; a timed-out call does the
-    same, or removes the shard's state once no window is open. Rows
-    with a NULL ``user_id`` share one window, as one user. A checkpoint
-    of the per-user limiter (keyed by ``user_id``) cannot be restarted
-    with this one: Spark refuses the changed key and state schema."""
+    ended at or below the watermark, and removes the shard's state once
+    no window is open. The operator runs with ``NoTimeout``, so Spark
+    calls the kernel only for shards that have data: a shard that sees
+    no further event keeps its ended windows, inside its one state row.
+    Rows with a NULL ``user_id`` share one window, as one user.
+
+    The limiter does NOT drop late rows: Spark filters rows at or below
+    the watermark inside this operator only under an event-time
+    timeout. Callers must drop them upstream, as ``start_pipeline``'s
+    ``dropDuplicatesWithinWatermark`` does (with the same
+    previous-trigger watermark Spark's own late filter would use).
+
+    Checkpoints: one of the per-user limiter (keyed by ``user_id``)
+    cannot be restarted with this one, as Spark refuses the changed key
+    and state schema; nor can one of the sharded limiter that armed an
+    event-time timeout, whose stored value carries a
+    ``timeoutTimestamp`` field (``STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE``).
+    There is no migration: start on a new checkpoint directory."""
     from pyspark.sql import functions as F
 
     if watermark is not None:
@@ -257,7 +274,7 @@ def rate_limit_stream(
         RATE_OUTPUT_SCHEMA,
         RATE_STATE_SCHEMA,
         "append",
-        GroupStateTimeout.EventTimeTimeout,
+        GroupStateTimeout.NoTimeout,
     )
 
 

@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from eventstream_notify_spark.functions.vector import cosine, dot, l2_norm
-from eventstream_notify_spark.operators.alerts import apply_rules, rules_df
+from eventstream_notify_spark.operators.alerts import apply_rules
 from eventstream_notify_spark.operators.multimodal import (
     decode_media,
     fake_decode_batches,
@@ -79,7 +79,7 @@ def test_alert_rules_unit(spark):
         ],
         "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
     )
-    fired = {(r.rule_id, r.event_id) for r in apply_rules(events, rules_df(spark)).collect()}
+    fired = {(r.rule_id, r.event_id) for r in apply_rules(events).collect()}
     # event 1: error>150 (r1) and value>190 (r2); event 3: purchase<10 (r3);
     # event 4: k>90 (r4); event 2: nothing
     assert fired == {(1, 1), (2, 1), (3, 3), (4, 4)}

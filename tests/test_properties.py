@@ -159,8 +159,9 @@ def test_results_invariant_to_shuffle_partition_count(spark, sf_dir):
 def test_streaming_state_is_bounded_by_eviction(spark, sf_dir, tmp_path):
     """The 100 TB streaming claim is bounded state: after a full
     replay through the pipeline, the rate limiter's state store holds
-    at most one row per user shard (RATE_SHARDS rows, each holding only
-    the users whose window is still open) and the dedup store far
+    at most one row per user shard (RATE_SHARDS rows, each holding the
+    users whose window was still open at the shard's last data call)
+    and the dedup store far
     fewer rows than events — NOT one per event. Asserted from the
     engine's own stateOperators progress metrics."""
     from pyspark.sql import functions as F

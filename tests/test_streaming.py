@@ -188,6 +188,31 @@ def test_pipeline_checkpoint_recovery_no_reprocessing(
     assert first_epochs < new_epochs
 
 
+def test_pipeline_drops_late_rows_before_the_limiter(spark, tmp_path):
+    """The limiter runs without a timeout, so Spark's late-row filter
+    does not run inside it; the pipeline's dedup drops late rows first.
+    Three one-file triggers with a 10 s watermark: 100 s, then 101 s,
+    then {90.5 s, 89 s, 102 s}. The third trigger's late filter uses
+    the previous trigger's watermark (90 s): 89 s is dropped, 90.5 s is
+    admitted although the limiter's eviction watermark is already
+    91 s."""
+    src_path = str(tmp_path / "src")
+    write_batch(spark, src_path, [ev(1, 100, 1)], 0)
+    write_batch(spark, src_path, [ev(2, 101, 2)], 1)
+    write_batch(spark, src_path, [ev(3, 90.5, 3), ev(4, 89, 4), ev(5, 102, 5)], 2)
+    admitted = []
+
+    def sink(batch_df, epoch_id):
+        admitted.extend(r.event_id for r in batch_df.collect())
+
+    q = start_pipeline(
+        stream_from(spark, src_path), str(tmp_path / "ckpt"), sink,
+        ttl="10 seconds", available_now=True,
+    )
+    q.awaitTermination()
+    assert sorted(admitted) == [1, 2, 3, 5]
+
+
 def test_keyed_store_epoch_overwrite_idempotent(spark, tmp_path):
     """A replayed micro-batch (same epoch id) overwrites itself —
     the exactly-once guarantee of the sink."""
@@ -249,7 +274,8 @@ def test_parse_wire_events_corrupt_path(spark):
 
 class _FakeState:
     """Minimal GroupState double for driving stateful kernels directly:
-    the watermark is set by the test, the armed timeout is recorded."""
+    the watermark is set by the test, the armed timeout (if any) is
+    recorded."""
 
     def __init__(self, watermark_ms=0):
         self.exists = False
@@ -518,9 +544,10 @@ def _admitted_reference(rows, limit, window_us):
 def test_rate_kernel_matches_per_user_reference(seed):
     """Zipf users (some NULL) over a stream cut into random
     micro-batches, each shard's rows split into random Arrow-like
-    chunks, the watermark trailing the newest event by 60 s and every
-    due timeout fired as Spark would: the admitted set equals the
-    per-user reference over the whole stream."""
+    chunks, the watermark trailing the newest event by 60 s: the
+    admitted set equals the per-user reference over the whole stream.
+    Like Spark under ``NoTimeout``, a shard's kernel runs only in the
+    batches that carry its rows, so all eviction is in data calls."""
     import numpy as np
 
     from eventstream_notify_spark.streaming.state import make_rate_limiter
@@ -557,10 +584,6 @@ def test_rate_kernel_matches_per_user_reference(seed):
                 ]
                 got.update(out["event_id"].tolist())
         wm_ms = max(wm_ms, (int(ts[batch].max()) - delay_us) // 1000)
-        for shard, st in states.items():
-            if st.exists and st.timeout_ms < wm_ms:
-                st.watermark_ms, st.hasTimedOut = wm_ms, True
-                assert list(fn((shard,), iter([]), st)) == []
     assert got == _admitted_reference(rows, limit, window_us)
     kept_users = sum(len(st.get[0]) for st in states.values() if st.exists)
     assert kept_users < len(set(users))  # eviction ran
@@ -577,7 +600,7 @@ def test_rate_kernel_window_continues_across_batches():
     out = _limit_call(fn, st, [(i, (10 + i) * S, 7) for i in range(3, 9)])
     assert out["event_id"].tolist() == [3, 4]
     assert st.get == ([7], [10 * S], [5])
-    assert st.timeout_ms == 70_000
+    assert st.timeout_ms is None
     assert _limit_call(fn, st, [(9, 69 * S, 7)]) is None
 
 
@@ -593,31 +616,36 @@ def test_rate_kernel_reanchors_after_window_end():
     )
     assert sorted(out["event_id"].tolist()) == [5, 6]
     assert st.get == ([7], [70 * S], [2])
-    assert st.timeout_ms == 130_000
+    assert st.timeout_ms is None
 
 
-def test_rate_kernel_evicts_ended_windows_and_rearms_timeout():
-    """Eviction is per user inside the shard: windows ending at or
-    below the watermark go, the timeout re-arms at the earliest
-    remaining end, and the shard's state is removed once empty."""
+def test_rate_kernel_evicts_ended_windows_in_data_calls():
+    """Eviction is per user inside the shard and happens in the calls
+    that carry data: windows ending at or below the watermark go, the
+    shard's state is removed once empty, and no timeout is ever
+    armed."""
     from eventstream_notify_spark.streaming.state import make_rate_limiter
 
     fn, st = make_rate_limiter(5, 60), _FakeState()
     _limit_call(fn, st, [(1, 30 * S, 3), (2, 0 * S + 1, 1), (3, 10 * S, 2)])
     assert st.get == ([1, 2, 3], [1, 10 * S, 30 * S], [1, 1, 1])
-    assert st.timeout_ms == 60_000  # user 1's window ends first
-    # user 2's window ends exactly at the watermark: evicted with user 1
-    st.watermark_ms, st.hasTimedOut = 70_000, True
-    assert list(fn((0,), iter([]), st)) == []
-    assert st.get == ([3], [30 * S], [1])
-    assert st.timeout_ms == 90_000
-    # a data call prunes too, before writing the touched shard
-    st.watermark_ms, st.hasTimedOut = 89_999, False
+    assert st.timeout_ms is None
+    # user 2's window ends exactly at the watermark: evicted with user
+    # 1 by the next call that carries data, before the shard is written
+    st.watermark_ms = 70_000
     _limit_call(fn, st, [(4, 150 * S, 4)])
     assert st.get == ([3, 4], [30 * S, 150 * S], [1, 1])
-    st.watermark_ms, st.hasTimedOut = 210_000, True
-    assert list(fn((0,), iter([]), st)) == []
+    assert st.timeout_ms is None
+    # user 3's window is still open one ms below its end
+    st.watermark_ms = 89_999
+    _limit_call(fn, st, [(5, 151 * S, 4)])
+    assert st.get == ([3, 4], [30 * S, 150 * S], [1, 2])
+    # the watermark passed every window, the call's own included: its
+    # row is still admitted, and the emptied shard is removed
+    st.watermark_ms = 270_000
+    assert _limit_call(fn, st, [(6, 200 * S, 5)])["event_id"].tolist() == [6]
     assert not st.exists and st.get is None
+    assert st.timeout_ms is None
 
 
 def test_rate_kernel_null_users_share_one_window():
