@@ -5,11 +5,10 @@ Alarm Verification', EDBT 2018 — PAPERS.md).
 Rules are DATA, not code: a short list of (event_type guard, metric,
 op, threshold) predicates, evaluated against each event as a literal
 array of structs inside the query plan. Changing a rule edits
-ALERT_RULES (or passes another list), so a running stream picks it up
-on its next start, not mid-stream. The streaming twin applies the same
-frame inside foreachBatch (streaming/pipeline.py) and lands fired
-alerts on the notification sink — the engine analogue of the
-reference's pub/sub fan-out (auto_kafka_redis.py:374).
+ALERT_RULES, or passes another list to ``apply_rules``. The streaming
+twin applies the same frame inside foreachBatch (streaming/pipeline.py)
+and lands fired alerts on the notification sink — the engine analogue
+of the reference's pub/sub fan-out (auto_kafka_redis.py:374).
 """
 
 from __future__ import annotations
@@ -44,9 +43,10 @@ def apply_rules(
 ) -> DataFrame:
     """Cross-apply the rules to an event frame: each event row is
     paired with every rule by ``inline`` over a literal array of rule
-    structs (no join, no driver-built rule frame, no broadcast job),
-    then filtered on the optional event_type guard and the predicate
-    over the chosen metric. Returns one row per (event, fired rule)."""
+    structs (a Generate in the plan, so no join and no job to build the
+    rules), then filtered on the optional event_type guard and the
+    predicate over the chosen metric. Returns one row per (event, fired
+    rule)."""
     rule_structs = F.array(*(F.struct(*map(F.lit, r)).cast(_RULE_TYPE) for r in rules))
     metric = F.when(F.col("metric") == "value", F.col("value")).otherwise(
         F.get_json_object("props", "$.k").cast("double")

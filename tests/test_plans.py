@@ -12,6 +12,7 @@ from eventstream_notify_spark.plans.explain import (
     assert_broadcast_join,
     assert_contains,
     assert_no_cartesian,
+    assert_not_contains,
     assert_pushed_filter,
     assert_read_schema_only,
     assert_take_ordered,
@@ -69,10 +70,13 @@ def test_scalar_pipeline_stays_in_codegen(spark, q):
     assert_whole_stage_codegen(q["scalar_math"](spark, SF))
 
 
-def test_alert_rules_broadcasts_rule_dim(spark, q):
+def test_alert_rules_inlines_rule_literals(spark, q):
+    # the rules are a literal array generated beside each event row:
+    # the event scan is never joined or shuffled
     df = q["alert_rules"](spark, SF)
     assert_no_cartesian(df)
-    assert_contains(df, "Broadcast")
+    assert_contains(df, "Generate")
+    assert_not_contains(df, "Join", "Exchange")
 
 
 def test_sim_search_broadcasts_queries(spark, q):

@@ -574,7 +574,7 @@ def test_rate_kernel_matches_per_user_reference(seed):
             by_shard.setdefault(0 if u is None else u % 5, []).append(rows[i])
         for shard, part in by_shard.items():
             st = states.setdefault(shard, _FakeState())
-            st.watermark_ms, st.hasTimedOut = wm_ms, False
+            st.watermark_ms = wm_ms
             frame = _rate_frame(part, shard).sample(frac=1.0, random_state=seed)
             cut = sorted(rng.integers(0, len(frame), rng.integers(0, 3)))
             chunks = [frame.iloc[a:b] for a, b in zip([0, *cut], [*cut, None])]
