@@ -940,8 +940,8 @@ def warmup(spark) -> None:
         .save()
     )
     # warm the STREAMING machinery too (micro-batch engine, state
-    # store provider, python state workers) with a one-batch run over
-    # 200 synthetic rows — again touching no benchmark data
+    # store provider, the compiled rate limiter) with a one-batch run
+    # over 200 synthetic rows — again touching no benchmark data
     try:
         import tempfile
 

@@ -5,7 +5,7 @@ reference consumer loop (auto_kafka_redis.py:320-408)   →  here
 ---------------------------------------------------------------------
 manual offset restore + commit (:231-270, :398-405)     →  checkpointLocation WAL
 per-event SETNX dedup w/ 60 s TTL (:332-346)            →  withWatermark + dropDuplicatesWithinWatermark
-per-user INCR/EXPIRE rate limit (:348-366)              →  applyInPandasWithState sharded by user_id (streaming/state.py)
+per-user INCR/EXPIRE rate limit (:348-366)              →  JVM flatMapGroupsWithState keyed by user_id (streaming/RateLimit.java)
 32-event Redis pipeline flush (:368-396)                →  micro-batch foreachBatch sink
 SET event:{id} + PUBLISH events (:372-374)              →  keyed upsert store + alert/notify sink
 
@@ -143,19 +143,18 @@ def start_pipeline(
     is scoped to ``start()`` (the query runs on a clone of the session
     taken there): the caller's session keeps its own value.
 
-    A checkpoint whose rate-limiter state predates the user-sharded
-    limiter (state keyed by ``user_id``) cannot be restarted: its
-    grouping key and state schema differ, and Spark refuses it with a
-    state-schema error. Nor can one written while the limiter armed an
-    event-time timeout: its stored state value carries a
-    ``timeoutTimestamp`` field, and Spark refuses the restart with
-    ``STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE``. Start such a pipeline
-    on a new checkpoint directory; there is no migration.
+    A checkpoint written by an earlier rate limiter (the pandas
+    limiter keyed by user shard, or the one keyed by ``user_id``
+    before it) cannot be restarted: the operator, its key and its
+    state schema differ, and Spark refuses it with a state-schema
+    error such as ``STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE`` (see
+    ``rate_limit_stream``). Start such a pipeline on a new
+    checkpoint directory; there is no migration.
 
-    Late rows: the limiter runs without a timeout, so Spark's late-row
-    filter does not run inside it. The dedup stage drops them instead:
-    ``dropDuplicatesWithinWatermark`` discards rows at or below the
-    previous trigger's watermark before they reach the limiter."""
+    Late rows: both stateful operators drop rows at or below the
+    previous trigger's watermark -- ``dropDuplicatesWithinWatermark``
+    first, then the limiter's own late-row filter, which Spark runs
+    under its event-time timeout."""
     admitted = rate_limit_stream(
         streaming_dedup(events, ttl),
         limit=rate_limit,

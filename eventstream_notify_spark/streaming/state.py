@@ -4,33 +4,39 @@ limiter (reference: INCR + EXPIRE-on-first, auto_kafka_redis.py:
 348-366 — the window starts at the first event and expires TTL later,
 unlike tumbling epoch windows).
 
-Implemented with ``applyInPandasWithState`` keyed by a user SHARD,
-``pmod(xxhash64(user_id), RATE_SHARDS)``, not by user: one Python call
-per touched shard per trigger instead of one per active user. A
-shard's state is parallel arrays (user_id, window_start_us,
-admitted_count) holding the users whose window was still open at the
-shard's last call. Eviction is lazy, like Redis expiring a key on
-access: each call that carries data drops the users whose window
-ended at or below the watermark. The limiter arms no timeout
-(``NoTimeout``), so Spark runs no timeout pass over the state, and
-state stays at most RATE_SHARDS rows (SURVEY §2 scale notes). A
-checkpoint written by the event-time-timeout limiter cannot be
-restarted with this one: its stored value carries a
-``timeoutTimestamp`` field, and Spark refuses the restart with
-``STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE``. There is no migration.
+The limiter runs in the JVM: ``RateLimit.java``, beside this module, is
+a ``flatMapGroupsWithState`` function keyed by ``user_id`` with state
+(window start µs, admitted) per user, compiled with ``javac`` at the
+first ``rate_limit_stream`` call and cached per source hash. Its
+event-time timeout fires at each window's end, so state holds the users
+whose window is still open (SURVEY §2 scale notes), and Spark drops
+late rows inside the operator. No Python worker runs in it. A
+checkpoint written by an earlier limiter cannot be restarted with this
+one: Spark refuses the pandas limiter's shard key with
+``STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE``, and the older per-user
+pandas state with a state-schema error too. There is no migration.
+
+The other operators here are ``applyInPandasWithState`` kernels.
 """
 
 from __future__ import annotations
 
+import hashlib
+import os
+import shutil
+import subprocess
+import tempfile
+import threading
 import warnings
+import zipfile
 from collections.abc import Iterator
+from pathlib import Path
 from typing import Any
 
-import numpy as np
 import pandas as pd
 
 # Python workers import this module while unpickling the stateful
-# kernel; PySpark's state serializer concat of empty frames trips a
+# kernels; PySpark's state serializer concat of empty frames trips a
 # pandas FutureWarning once per (worker, batch, key-group) — pure noise
 # in any harness log. Scope the filter to that message, not the class.
 warnings.filterwarnings(
@@ -38,7 +44,7 @@ warnings.filterwarnings(
     message=".*DataFrame concatenation with empty or all-NA entries.*",
     category=FutureWarning,
 )
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 RATE_OUTPUT_SCHEMA = (
@@ -46,182 +52,73 @@ RATE_OUTPUT_SCHEMA = (
     "value double, props string"
 )
 _RATE_COLS = [f.split()[0] for f in RATE_OUTPUT_SCHEMA.split(",")]
-RATE_SHARDS = 64  # limiter state keys: numRowsTotal <= 64 whatever the users
-RATE_STATE_SCHEMA = (
-    "user_id array<long>, win_start_us array<long>, admitted array<int>"
-)
-
-# A shard's open windows as parallel arrays (user_id, is_null,
-# win_start_us, admitted), sorted by (is_null, user_id): the NULL user
-# (at most one) sorts last, with id 0 in the array.
-_Users = tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]
+_RATE_LIMIT_SRC = Path(__file__).with_name("RateLimit.java")
+_RATE_LIMIT_CLASS = "eventstream_notify_spark.streaming.RateLimit"
+# (SparkContext, the RateLimit class loaded in its JVM): one load per context
+_rate_limit_loaded: tuple[Any, Any] | None = None
+_rate_limit_lock = threading.Lock()
 
 
-def _shard_users(state: GroupState) -> _Users:
-    """The open windows of a shard's state; a stored None id is the
-    NULL user's window, always the last entry."""
-    if not state.exists:
-        uids, starts, adm = [], [], []
-    else:
-        uids, starts, adm = (list(a) for a in state.get)
-    is_null = np.zeros(len(uids), dtype=bool)
-    if uids and uids[-1] is None:
-        uids[-1] = 0
-        is_null[-1] = True
-    return (
-        np.array(uids, dtype=np.int64),
-        is_null,
-        np.array(starts, dtype=np.int64),
-        np.array(adm, dtype=np.int64),
-    )
+def _rate_limit_jar(source: Path, classpath: str, java_home: str, version: str) -> Path:
+    """The compiled limiter in the user cache, built on first use.
+
+    The jar's name hashes ``source`` and ``version`` (the Java and Spark
+    versions it is compiled for), so an edit or an upgrade rebuilds it.
+    It is written under a private name and published with an atomic
+    ``os.replace``: racing first uses each publish a whole jar."""
+    key = hashlib.sha256(source.read_bytes() + version.encode()).hexdigest()[:16]
+    cache = Path(os.environ.get("XDG_CACHE_HOME") or Path.home() / ".cache")
+    jar = cache / "eventstream_notify_spark" / f"ratelimit-{key}.jar"
+    if jar.exists():
+        return jar
+    jdk_bin = os.path.join(java_home, "bin")
+    javac = shutil.which("javac", path=jdk_bin) or shutil.which("javac")
+    if javac is None:
+        raise RuntimeError(
+            "rate_limit_stream compiles its operator with `javac`, which is "
+            f"neither in {jdk_bin} nor on PATH: install a JDK"
+        )
+    jar.parent.mkdir(parents=True, exist_ok=True)
+    with tempfile.TemporaryDirectory(dir=jar.parent) as tmp:
+        built = subprocess.run(
+            [javac, "-nowarn", "-cp", classpath, "-d", tmp, str(source)],
+            capture_output=True,
+            text=True,
+        )
+        if built.returncode:
+            raise RuntimeError(f"javac failed on {source}:\n{built.stderr}")
+        part = os.path.join(tmp, jar.name)
+        with zipfile.ZipFile(part, "w") as z:
+            for cls in Path(tmp).rglob("*.class"):
+                z.write(cls, cls.relative_to(tmp).as_posix())
+        os.replace(part, jar)
+    return jar
 
 
-def _state_value(users: _Users) -> tuple[list, list, list]:
-    uid, is_null, start, adm = users
-    ids = uid.tolist()
-    if len(ids) and is_null[-1]:
-        ids[-1] = None
-    return ids, start.tolist(), adm.tolist()
-
-
-def _admit(
-    uid: np.ndarray,
-    is_null: np.ndarray,
-    ts_us: np.ndarray,
-    event_id: np.ndarray,
-    users: _Users,
-    limit: int,
-    window_us: int,
-) -> tuple[np.ndarray, _Users]:
-    """One numpy pass of the limiter over a shard's rows: the keep mask
-    (in input order) and the shard's windows after the rows.
-
-    Each user's rows, in (ts, event_id) order, first fill the window
-    the user left open, then open windows anchored at their first
-    event, each admitting its first ``limit`` rows. Every round of the
-    anchor loop advances all users by one window at once, so the loop
-    runs (most windows one user opens in the batch) times."""
-    n = len(ts_us)
-    order = np.lexsort((event_id, ts_us, uid, is_null))
-    uid, is_null, ts_us = uid[order], is_null[order], ts_us[order]
-    new_user = np.ones(n, dtype=bool)
-    new_user[1:] = (uid[1:] != uid[:-1]) | (is_null[1:] != is_null[:-1])
-    gs = np.flatnonzero(new_user)  # each user's first row
-    ge = np.append(gs[1:], n)  # one past its last row
-    grp = np.cumsum(new_user) - 1  # each row's user
-    g_uid, g_null = uid[gs], is_null[gs]
-
-    # join each user to the window it left open, if any
-    s_uid, s_null, s_start, s_adm = users
-    m = len(s_uid) - int(s_null[-1:].sum())  # non-NULL users stored
-    idx = np.searchsorted(s_uid[:m], g_uid)
-    idx[g_null] = m
-    found = idx < len(s_uid)
-    hit = idx[found]
-    found[found] = (s_uid[hit] == g_uid[found]) & (s_null[hit] == g_null[found])
-    hit = idx[found]  # the stored slot of each user that has one
-    w_start = np.zeros(len(gs), dtype=np.int64)
-    w_adm = np.zeros(len(gs), dtype=np.int64)
-    w_start[found] = s_start[hit]
-    w_adm[found] = s_adm[hit]
-
-    # rows inside the open window: a prefix of each user's rows
-    rank = np.arange(n) - gs[grp]
-    cont = found[grp] & (ts_us < (w_start + window_us)[grp])
-    n_cont = np.bincount(grp, weights=cont, minlength=len(gs)).astype(np.int64)
-    room = np.clip(limit - w_adm, 0, None)
-    keep = cont & (rank < room[grp])
-
-    # nxt[r]: the first row of r's user at or past ts[r] + window, by
-    # one searchsorted over (user, dense rank of ts) -- monotone keys
-    ranks = np.unique(np.concatenate([ts_us, ts_us + window_us]))
-    span = len(ranks)
-    pos = grp * span + np.searchsorted(ranks, ts_us)
-    nxt = np.searchsorted(
-        pos, grp * span + np.searchsorted(ranks, ts_us + window_us)
-    )
-    first = gs + n_cont  # each user's first row past its open window
-    anchor = np.zeros(n, dtype=bool)
-    opened = first < ge
-    cur, end = first[opened], ge[opened]
-    while len(cur):
-        anchor[cur] = True
-        cur = nxt[cur]
-        more = cur < end
-        cur, end = cur[more], end[more]
-    last = np.maximum.accumulate(np.where(anchor, np.arange(n), -1))
-    keep |= ~cont & (np.arange(n) - last < limit)
-
-    la = last[ge - 1]  # each user's last anchor, where it opened one
-    g_start = np.where(opened, ts_us[la], w_start)
-    g_adm = np.where(
-        opened, np.minimum(limit, ge - la), w_adm + np.minimum(room, n_cont)
-    )
-    untouched = np.ones(len(s_uid), dtype=bool)
-    untouched[hit] = False
-    merged = (
-        np.concatenate([s_uid[untouched], g_uid]),
-        np.concatenate([s_null[untouched], g_null]),
-        np.concatenate([s_start[untouched], g_start]),
-        np.concatenate([s_adm[untouched], g_adm]),
-    )
-    o = np.lexsort((merged[0], merged[1]))
-    keep_in = np.empty(n, dtype=bool)
-    keep_in[order] = keep
-    return keep_in, tuple(a[o] for a in merged)
-
-
-def make_rate_limiter(limit: int, window_s: int):
-    """Build the per-shard kernel. Kept importable/picklable at module
-    scope via closure over plain ints.
-
-    Input rows carry ``user_id`` with NULL replaced by 0 and a
-    ``user_null`` flag (so the ids stay exact int64 -- a NULL would
-    turn the column into float64), plus the ``shard`` key; the output
-    restores the NULLs and drops both helper columns."""
-    window_us = window_s * 1_000_000
-
-    def limit_fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        users = _shard_users(state)
-        # Grouping by key is the only ordering guarantee; a shard that
-        # spans several Arrow chunks can interleave, and the
-        # window-anchor recurrence is order-sensitive — materialize
-        # the shard and sort once (same hazard as ewma_fn below).
-        chunks = [c for c in pdfs if len(c)]
-        if chunks:
-            pdf = pd.concat(chunks, ignore_index=True)
-            uid = pdf["user_id"].to_numpy(np.int64)
-            is_null = pdf["user_null"].to_numpy(bool)
-            keep, users = _admit(
-                uid,
-                is_null,
-                pdf["ts"].astype("int64").to_numpy() // 1000,
-                pdf["event_id"].to_numpy(),
-                users,
-                limit,
-                window_us,
+def _rate_limit_class(spark: SparkSession):
+    """The RateLimit class, compiled if need be and loaded once per
+    SparkContext: ``addJar`` ships it to the tasks, and a class loader
+    over the jar makes it on the driver. Nothing is set on the session."""
+    global _rate_limit_loaded
+    sc = spark.sparkContext
+    with _rate_limit_lock:
+        if _rate_limit_loaded is None or _rate_limit_loaded[0] is not sc:
+            jvm = sc._jvm
+            prop = jvm.java.lang.System.getProperty
+            jar = _rate_limit_jar(
+                _RATE_LIMIT_SRC,
+                prop("java.class.path"),
+                prop("java.home"),
+                f"java {prop('java.specification.version')} spark {spark.version}",
             )
-            if keep.any():
-                out = pdf.loc[keep, _RATE_COLS]
-                if is_null[keep].any():
-                    out = out.assign(
-                        user_id=pd.arrays.IntegerArray(uid[keep], is_null[keep])
-                    )
-                yield out
-        # evict per user: late rows are dropped upstream, so a window
-        # that ended at or below the watermark can admit nothing more
-        open_ = users[2] + window_us > state.getCurrentWatermarkMs() * 1000
-        users = tuple(a[open_] for a in users)
-        if not len(users[0]):
-            state.remove()
-            return
-        state.update(_state_value(users))
-
-    return limit_fn
+            sc._jsc.sc().addJar(str(jar))
+            urls = sc._gateway.new_array(jvm.java.net.URL, 1)
+            urls[0] = jvm.java.io.File(str(jar)).toURI().toURL()
+            loader = jvm.java.net.URLClassLoader(
+                urls, jvm.java.lang.Thread.currentThread().getContextClassLoader()
+            )
+            _rate_limit_loaded = (sc, loader.loadClass(_RATE_LIMIT_CLASS))
+        return _rate_limit_loaded[1]
 
 
 def rate_limit_stream(
@@ -231,50 +128,38 @@ def rate_limit_stream(
     watermark: str | None = "60 seconds",
 ) -> DataFrame:
     """First-event-anchored rate limit over a stream. ``events`` must
-    carry event-time column ``ts``. Pass ``watermark=None`` when an
-    upstream operator already declared one (Spark disallows
-    redefinition past a stateful operator).
+    carry the ``RATE_OUTPUT_SCHEMA`` columns, with event time ``ts``.
+    Pass ``watermark=None`` when an upstream operator already declared
+    one (Spark disallows redefinition past a stateful operator).
 
-    State is keyed by ``pmod(xxhash64(user_id), RATE_SHARDS)``: each
-    trigger makes one kernel call and one state write per touched
-    shard, and ``numRowsTotal`` is at most RATE_SHARDS. Inside a shard,
-    eviction stays per user: each call drops the users whose window
-    ended at or below the watermark, and removes the shard's state once
-    no window is open. The operator runs with ``NoTimeout``, so Spark
-    calls the kernel only for shards that have data: a shard that sees
-    no further event keeps its ended windows, inside its one state row.
-    Rows with a NULL ``user_id`` share one window, as one user.
+    Runs ``RateLimit.java``: a ``flatMapGroupsWithState`` keyed by
+    ``user_id``, with state (window start µs, admitted) per user and an
+    event-time timeout at the window's end, so state holds the users
+    whose window the watermark has not passed. Rows with a NULL
+    ``user_id`` share one window, as one user. Rows at or below the
+    watermark are dropped before the limiter sees them (Spark's
+    late-row filter runs inside the operator under an event-time
+    timeout). The first call in a SparkContext compiles the class
+    with the JDK's ``javac`` (once per source, cached under
+    ``~/.cache/eventstream_notify_spark``) and loads it.
 
-    The limiter does NOT drop late rows: Spark filters rows at or below
-    the watermark inside this operator only under an event-time
-    timeout. Callers must drop them upstream, as ``start_pipeline``'s
-    ``dropDuplicatesWithinWatermark`` does (with the same
-    previous-trigger watermark Spark's own late filter would use).
-
-    Checkpoints: one of the per-user limiter (keyed by ``user_id``)
-    cannot be restarted with this one, as Spark refuses the changed key
-    and state schema; nor can one of the sharded limiter that armed an
-    event-time timeout, whose stored value carries a
-    ``timeoutTimestamp`` field (``STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE``).
-    There is no migration: start on a new checkpoint directory."""
-    from pyspark.sql import functions as F
-
+    Checkpoints: one written by an earlier limiter cannot be restarted
+    with this one. Spark refuses the pandas limiter keyed by user shard
+    with ``STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE`` (int shard key, now a
+    long user key), and the older pandas limiter keyed by ``user_id``
+    on its state schema. There is no migration: start on a new
+    checkpoint directory."""
     if watermark is not None:
         events = events.withWatermark("ts", watermark)
-    uid = F.col("user_id")
-    keyed = events.withColumns(
-        {
-            "user_id": F.coalesce(uid, F.lit(0).cast("long")),
-            "user_null": uid.isNull(),
-            "shard": F.pmod(F.xxhash64(uid), F.lit(RATE_SHARDS)).cast("int"),
-        }
-    )
-    return keyed.groupBy("shard").applyInPandasWithState(
-        make_rate_limiter(limit, window_s),
-        RATE_OUTPUT_SCHEMA,
-        RATE_STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.NoTimeout,
+    spark = events.sparkSession
+    jvm, gw = spark.sparkContext._jvm, spark.sparkContext._gateway
+    types = gw.new_array(jvm.java.lang.Class, 2)
+    types[0] = types[1] = jvm.java.lang.Long.TYPE
+    args = gw.new_array(jvm.java.lang.Object, 2)
+    args[0], args[1] = limit, window_s * 1_000_000
+    limiter = _rate_limit_class(spark).getDeclaredConstructor(types).newInstance(args)
+    return DataFrame(
+        limiter.apply(events.select(*_RATE_COLS)._jdf, RATE_OUTPUT_SCHEMA), spark
     )
 
 

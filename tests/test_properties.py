@@ -159,17 +159,16 @@ def test_results_invariant_to_shuffle_partition_count(spark, sf_dir):
 def test_streaming_state_is_bounded_by_eviction(spark, sf_dir, tmp_path):
     """The 100 TB streaming claim is bounded state: after a full
     replay through the pipeline, the rate limiter's state store holds
-    at most one row per user shard (RATE_SHARDS rows, each holding the
-    users whose window was still open at the shard's last data call)
-    and the dedup store far
-    fewer rows than events — NOT one per event. Asserted from the
-    engine's own stateOperators progress metrics."""
+    only the users whose window the final watermark has not passed --
+    at most the users with an event at or after max(ts) - (ttl +
+    window) -- and the dedup store far fewer rows than events — NOT
+    one per event. Asserted from the engine's own stateOperators
+    progress metrics."""
     from pyspark.sql import functions as F
 
     from eventstream_notify_spark.catalog import table
     from eventstream_notify_spark.sources.events import file_events_stream
     from eventstream_notify_spark.streaming.pipeline import start_pipeline
-    from eventstream_notify_spark.streaming.state import RATE_SHARDS
 
     n_users = table(spark, sf_dir, "events").select("user_id").distinct().count()
     n_events = table(spark, sf_dir, "events").count()
@@ -197,7 +196,17 @@ def test_streaming_state_is_bounded_by_eviction(spark, sf_dir, tmp_path):
             f"{n_events} events / {n_users} users — eviction broken?"
         )
     limiter = [
-        op for op in states if op["operatorName"] == "applyInPandasWithState"
+        op for op in states if op["operatorName"] == "flatMapGroupsWithState"
     ]
     assert len(limiter) == 1
-    assert limiter[0]["numRowsTotal"] <= RATE_SHARDS
+    # start_pipeline's defaults: a 60 s ttl (the watermark delay) and
+    # 60 s windows
+    events = table(spark, sf_dir, "events")
+    horizon = events.select(
+        F.max("ts") - F.expr("INTERVAL 120 SECONDS")
+    ).first()[0]
+    open_users = (
+        events.where(F.col("ts") >= horizon)
+        .select("user_id").distinct().count()
+    )
+    assert limiter[0]["numRowsTotal"] <= open_users
