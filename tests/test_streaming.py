@@ -525,7 +525,7 @@ def _write_us(spark, path, rows, batch_no):
 
 def _run_limiter(spark, tmp_path, limit, window_s, watermark):
     """rate_limit_stream over tmp_path/src, one file a trigger, into a
-    memory sink: (admitted event ids, the limiter's stateOperators
+    memory sink: (admitted rows, the limiter's stateOperators
     entry of every progress). Two state partitions: every partition
     keeps a RocksDB instance loaded in the session after the query
     ends."""
@@ -545,14 +545,14 @@ def _run_limiter(spark, tmp_path, limit, window_s, watermark):
             .start()
         )
     q.awaitTermination()
-    ids = [r.event_id for r in spark.table(name).collect()]
+    rows = spark.table(name).collect()
     ops = [
         op
         for p in q.recentProgress
         for op in json.loads(p.json)["stateOperators"]
         if op["operatorName"] == "flatMapGroupsWithState"
     ]
-    return ids, ops
+    return rows, ops
 
 
 @pytest.mark.parametrize("seed", [0, 1, 2])
@@ -577,42 +577,80 @@ def test_rate_limit_stream_matches_per_user_reference(spark, tmp_path, seed):
     cuts = np.sort(rng.choice(np.arange(1, n), size=5, replace=False))
     for k, part in enumerate(np.split(np.arange(n), cuts)):
         _write_us(spark, str(tmp_path / "src"), [rows[i] for i in rng.permutation(part)], k)
-    ids, ops = _run_limiter(spark, tmp_path, limit, window_s, "60 seconds")
+    out, ops = _run_limiter(spark, tmp_path, limit, window_s, "60 seconds")
+    ids = [r.event_id for r in out]
     assert len(ids) == len(set(ids))
     assert set(ids) == _admitted_reference(rows, limit, window_s * S)
     assert sum(op["numRowsRemoved"] for op in ops) > 0
     assert ops[-1]["numRowsTotal"] < len(set(users))
 
 
-def test_rate_limit_stream_windows_across_triggers(spark, tmp_path):
-    """Three one-file triggers, limit 5, 60 s windows, rows shuffled in
-    each file. User 7's window continues across triggers until full;
-    user 8's re-anchors at the first event at or past its end (70 s);
-    NULL users share one window, apart from user 0."""
+def _limit_files(spark, tmp_path, files, limit):
+    """Each list of (event_id, ts µs, user) rows one file and one
+    trigger, shuffled inside the file, 60 s windows; the limiter's
+    admitted rows as {event_id: user_id}, after checking none came out
+    twice."""
     import random
 
-    src = str(tmp_path / "src")
-    files = [
-        [(i, (10 + i) * S, 7) for i in range(3)]
-        + [(11 + k, (10 + 10 * k) * S, 8) for k in range(5)]
-        + [(30 + k, (1 + k) * S, None) for k in range(8)]
-        + [(40 + k, (1 + k) * S, 0) for k in range(8)],
-        [(i, (10 + i) * S, 7) for i in range(3, 9)]
-        + [(16, 69 * S, 8)]
-        + [(17 + k, (70 + k) * S, 8) for k in range(6)]
-        + [(38, 65 * S, None)],
-        [(9, 69 * S, 7)],
-    ]
     for k, rows in enumerate(files):
-        _write_us(spark, src, random.Random(k).sample(rows, len(rows)), k)
-    ids, _ = _run_limiter(spark, tmp_path, 5, 60, "60 seconds")
-    assert sorted(ids) == [
-        0, 1, 2, 3, 4,  # user 7: 3 + 2 in [10 s, 70 s), 69 s dropped
-        11, 12, 13, 14, 15, 17, 18, 19, 20, 21,  # user 8: 5, 69 s dropped, 5 from 70 s
-        30, 31, 32, 33, 34, 38,  # NULL users: 5 in [1 s, 61 s), 65 s re-anchors
-        40, 41, 42, 43, 44,  # user 0
-    ]
-    assert ids == sorted(set(ids), key=ids.index)  # nothing admitted twice
+        _write_us(
+            spark, str(tmp_path / "src"), random.Random(k).sample(rows, len(rows)), k
+        )
+    rows, _ = _run_limiter(spark, tmp_path, limit, 60, "60 seconds")
+    admitted = {r.event_id: r.user_id for r in rows}
+    assert len(admitted) == len(rows)
+    return admitted
+
+
+def test_rate_kernel_window_continues_across_batches(spark, tmp_path):
+    """User 7's window [10 s, 70 s) admits 3 rows in the first trigger
+    and 2 in the second, then is full: the rest of the second trigger
+    and 69 s in the third are dropped."""
+    admitted = _limit_files(
+        spark,
+        tmp_path,
+        [
+            [(i, (10 + i) * S, 7) for i in range(3)],
+            [(i, (10 + i) * S, 7) for i in range(3, 9)],
+            [(9, 69 * S, 7)],
+        ],
+        limit=5,
+    )
+    assert sorted(admitted) == [0, 1, 2, 3, 4]
+
+
+def test_rate_kernel_reanchors_after_window_end(spark, tmp_path):
+    """Limit 2: the window [10 s, 70 s) is full after the first
+    trigger, so 69 s is dropped; 70 s is the first event at or past its
+    end and anchors [70 s, 130 s), which admits 71 s and drops 72 s."""
+    admitted = _limit_files(
+        spark,
+        tmp_path,
+        [
+            [(1, 10 * S, 7), (2, 20 * S, 7), (3, 30 * S, 7)],
+            [(4, 69 * S, 7), (5, 70 * S, 7), (6, 71 * S, 7), (7, 72 * S, 7)],
+        ],
+        limit=2,
+    )
+    assert sorted(admitted) == [1, 2, 5, 6]
+
+
+def test_rate_kernel_null_users_share_one_window(spark, tmp_path):
+    """NULL user_id rows are limited as one user, apart from user 0,
+    and come out NULL. Their window [2 s, 62 s) is full at 30 s in the
+    next trigger; 70 s re-anchors."""
+    admitted = _limit_files(
+        spark,
+        tmp_path,
+        [
+            [(i, (i + 1) * S, None if i % 2 else 0) for i in range(10)],
+            [(20, 30 * S, None), (21, 70 * S, None)],
+        ],
+        limit=3,
+    )
+    assert admitted == {
+        0: 0, 2: 0, 4: 0, 1: None, 3: None, 5: None, 21: None
+    }
 
 
 def test_rate_limit_stream_evicts_a_user_once_the_watermark_passes(
@@ -624,8 +662,8 @@ def test_rate_limit_stream_evicts_a_user_once_the_watermark_passes(
     src = str(tmp_path / "src")
     _write_us(spark, src, [(1, 100 * S, 1)], 0)
     _write_us(spark, src, [(2, 300 * S, 2)], 1)
-    ids, ops = _run_limiter(spark, tmp_path, 5, 60, "60 seconds")
-    assert sorted(ids) == [1, 2]
+    rows, ops = _run_limiter(spark, tmp_path, 5, 60, "60 seconds")
+    assert sorted(r.event_id for r in rows) == [1, 2]
     assert [op["numRowsTotal"] for op in ops][:2] == [1, 2]
     assert ops[-1]["numRowsTotal"] == 1
     assert sum(op["numRowsRemoved"] for op in ops) == 1
@@ -641,8 +679,8 @@ def test_rate_limit_stream_drops_late_rows(spark, tmp_path):
     _write_us(spark, src, [(1, 100 * S, 1)], 0)
     _write_us(spark, src, [(2, 101 * S, 2)], 1)
     _write_us(spark, src, [(3, 90_500_000, 3), (4, 89 * S, 4), (5, 102 * S, 5)], 2)
-    ids, _ = _run_limiter(spark, tmp_path, 5, 60, "10 seconds")
-    assert sorted(ids) == [1, 2, 3, 5]
+    rows, _ = _run_limiter(spark, tmp_path, 5, 60, "10 seconds")
+    assert sorted(r.event_id for r in rows) == [1, 2, 3, 5]
 
 
 def _jar_args(spark):
